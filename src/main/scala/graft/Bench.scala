@@ -329,7 +329,7 @@ object Bench {
     * round 8 (none are in the original cross-round-comparable 14): they are
     * still RUN and error-gated every bench — a failure still fails the run —
     * and their timings print on an EARLY stdout line (far from the driver's
-    * 2000-char tail) plus the per-round TimeQuery table in SCALE.md. The
+    * 2000-char tail) plus the per-round timing table in SCALE.md. The
     * rotation exists because the results line must fit the tail with slack
     * (see the budget note at the bottom of [[main]]); r7's 67-query line hit
     * 1820 chars and the driver recorded `parsed: null`. */
@@ -441,7 +441,7 @@ object Bench {
     * driver's 2000-char tail keeps BOTH final lines complete instead
     * of cutting the secondary line mid-entry (r13–r16 tails all did).
     * Rotation policy: an entry leaves this list once its timing has
-    * been flat for two rounds; SCALE.md's per-round TimeQuery table
+    * been flat for two rounds; SCALE.md's per-round timing table
     * keeps the rotated histories. */
   private[graft] val recentSecondary = Seq(
     // q_takedown_attest rotated to archived in r17 (funding the new
@@ -453,8 +453,15 @@ object Bench {
   private[graft] val archived: Seq[String] =
     secondary.filterNot(recentSecondary.toSet)
 
-  private def force(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** Warm-up at the smallest SF: JIT + codegen + parquet footer caches, so
+    * a timed run measures the query, not JVM warm-up (first-query skew
+    * dominated round 1's q_count_by_key). */
+  private[graft] def warmUp(spark: SparkSession,
+                            fn: (SparkSession, String) => DataFrame): Unit =
+    try force(fn(spark, "/root/testdata/sf0.001")) catch { case _: Throwable => () }
 
   /** Optimizer sink for [[calibrationRun]] — a field the JIT cannot
     * prove dead, so the calibration loop is never eliminated. */
@@ -684,12 +691,13 @@ object Bench {
     * batch 1).
     *
     * State partitions are sized to the replay (8, not the session-wide 32):
-    * the r9 `StreamJoinProbe` adjudication of the r8 8.9k rows/s showed
-    * the bound was per-micro-batch state-store COMMIT overhead — a
-    * symmetric join maintains 4 internal stores per partition per trigger,
-    * so 32 partitions × 4 stores × 4 triggers of bookkeeping dwarfed the
-    * actual ~25k-rows-per-batch join work (probe: 8.1k rows/s at 32
-    * partitions vs 22.8k at 8; single-trigger 17-21.9k; RocksDB ±15%).
+    * the r9 stream-join probe (SCALE.md) that adjudicated the r8 8.9k
+    * rows/s showed the bound was per-micro-batch state-store COMMIT
+    * overhead — a symmetric join maintains 4 internal stores per
+    * partition per trigger, so 32 partitions × 4 stores × 4 triggers of
+    * bookkeeping dwarfed the actual ~25k-rows-per-batch join work
+    * (probe: 8.1k rows/s at 32 partitions vs 22.8k at 8; single-trigger
+    * 17-21.9k; RocksDB ±15%).
     * Sizing state partitions to per-batch volume is the standard
     * production lever; the conf is scoped to this query (set at start,
     * restored after) so the other stream benches stay comparable. */
@@ -781,7 +789,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Host-speed canary, phase 1 of 2 (the second runs after the sweep):
     // the factor self-normalizes the driver line against ambient host
     // drift — the judge has had to re-measure "regressions" on unchanged
@@ -790,26 +797,7 @@ object Bench {
     // The I/O twin brackets the STATEFUL stream benches below (their
     // commit path is sync-write-bound and invisible to a CPU canary).
     val ioBefore = ioCalibrationPhase()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Split the single-file fixtures across cores: at production scale a
-      // table is many files and scan parallelism is free, but here one 2 MB
-      // parquet file under the default 128 MB maxPartitionBytes = ONE task,
-      // so every narrow pipeline (from_json decode etc.) ran single-threaded.
-      // 1 MB splits ≈ row-group granularity for these fixtures.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // Shuffled-hash join allowed where its size conditions hold (r17,
-      // guide §3.1/§9): the planner's guards still apply — this only
-      // stops Spark PREFERRING the sort in sort-merge when a hash build
-      // fits; measured −20..−35% on the join-heavy bench families with
-      // no regressions (OPTIMIZATION_r17.md).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get()
     // A headline name that no longer resolves must fail the run, not
     // silently shrink the bench (the same pass-by-omission hazard as
     // round 6's Verify gap). `secondary` is a SUBSET of `headline`: every
@@ -820,12 +808,7 @@ object Bench {
     val stray = secondary.filterNot(headline.contains)
     require(stray.isEmpty, s"secondary names not in headline: $stray")
     val queries = headline.map(n => n -> SparkEntry.queries(n))
-    // Warm-up at the smallest SF: JIT + codegen + parquet footer caches, so
-    // per-query numbers measure the query, not JVM warm-up (first-query skew
-    // dominated round 1's q_count_by_key).
-    queries.foreach { case (_, fn) =>
-      try force(fn(spark, "/root/testdata/sf0.001")) catch { case _: Throwable => () }
-    }
+    queries.foreach { case (_, fn) => warmUp(spark, fn) }
     // A failing query must NOT masquerade as a fast one: it reports -1 in
     // `queries` (keeps values numeric for the driver) and its exception
     // class in `errors`. Each query is timed as the BEST of AT LEAST two

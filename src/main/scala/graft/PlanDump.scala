@@ -3,44 +3,32 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Evidence generator: the FORMATTED physical plan of every Bench headline
-  * query, written to PLANS.md. This is the ".explain and iterate" loop made
-  * inspectable — pushed filters, read schemas, exchange counts, and
-  * WholeStageCodegen spans per query, regenerated per round so plan
-  * regressions show up in the diff. Usage:
+  * query (or of the named queries, at any SF), written to PLANS.md. This is
+  * the ".explain and iterate" loop made inspectable — pushed filters, read
+  * schemas, join strategies, exchange counts, and WholeStageCodegen spans
+  * per query, regenerated per round so plan regressions show up in the
+  * diff. Plans are explained under the [[Session]] confs, i.e. the joins
+  * and splits that ship. Usage:
   *
-  *   sbt "runMain graft.PlanDump [sfDir] [outFile]"
+  *   sbt "runMain graft.PlanDump [sfDir] [outFile] [query ...]"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // Shuffled-hash join allowed where its size conditions hold (r17,
-      // guide §3.1/§9): the planner's guards still apply — this only
-      // stops Spark PREFERRING the sort in sort-merge when a hash build
-      // fits; measured −20..−35% on the join-heavy bench families with
-      // no regressions (OPTIMIZATION_r17.md).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = if (args.length > 2) args.drop(2).toSeq else Bench.headline
+    val spark = Session.get()
 
     val sb = new StringBuilder
-    sb ++= "# Headline-query physical plans\n\n"
+    sb ++= (if (names == Bench.headline) "# Headline-query physical plans\n\n"
+            else "# Physical plans\n\n")
     sb ++= s"Generated by `graft.PlanDump` over `$sfDir`. AQE plans print "
     sb ++= "their initial shape (`isFinalPlan=false`); runtime re-planning "
     sb ++= "(coalesced partitions, skew splits) happens on execution.\n"
-    for (name <- Bench.headline) {
+    for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb ++= s"\n## $name\n\n```\n"
       // Binary literals (broadcast sketch/bloom bytes) print as full hex —
@@ -54,7 +42,7 @@ object PlanDump {
       sb ++= "\n```\n"
     }
     Files.write(Paths.get(out), sb.toString.getBytes(StandardCharsets.UTF_8))
-    println(s"[plandump] wrote ${Bench.headline.size} plans to $out")
+    println(s"[plandump] wrote ${names.size} plans to $out")
     spark.stop()
   }
 }

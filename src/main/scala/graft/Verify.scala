@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,24 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional query-name filter (debugging)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Row-group-granular scan splits for the single-file fixtures (see
-      // Bench.scala) — without this every narrow pipeline is one task.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // Shuffled-hash join allowed where its size conditions hold (r17,
-      // guide §3.1/§9): the planner's guards still apply — this only
-      // stops Spark PREFERRING the sort in sort-merge when a hash build
-      // fits; measured −20..−35% on the join-heavy bench families with
-      // no regressions (OPTIMIZATION_r17.md).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get()
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave a VISIBLE failure record, not a gap:
     // round 6's NTZ fixture regression crashed 18 queries and the round's

@@ -525,6 +525,8 @@ object Dedup {
         col(scoreCol).as("rep_score"))
   }
 
+  private val ccSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** The reusable CC core behind [[clusters]]: label every `node` with the
     * minimum node id reachable through `pairs` (columns `src`, `dst` —
     * treated as undirected; nodes absent from any pair label themselves).
@@ -536,13 +538,6 @@ object Dedup {
     * diameter, self-verified exact, so an adversarial chain-shaped
     * component degrades to extra rounds instead of an outage.
     * Output: (node, cluster_id). */
-  /** Rounds the most recent [[connectedComponents]] call took to converge —
-    * measurement/debug telemetry (CcProbe, perf notes), never consulted by
-    * the operators themselves. */
-  @volatile private[graft] var lastRounds: Int = 0
-
-  private val ccSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           maxIter: Int = 50,
                           driverLimit: Long = DriverCcEdgeLimit): DataFrame =
@@ -632,7 +627,6 @@ object Dedup {
         edges.select(col("src"), col("dst")).collect()
           .map(r => (r.getLong(0), r.getLong(1))))
       edges.unpersist()
-      lastRounds = 0 // driver path — no distributed rounds ran
       val spark = pairs.sparkSession
       import spark.implicits._
       return out.toSeq.toDF("node", "cluster_id")
@@ -745,7 +739,6 @@ object Dedup {
         merged
       }
     edges.unpersist()
-    lastRounds = iter // instrumentation only (see field scaladoc)
     resolved.withColumnRenamed("label", "cluster_id")
   }
 
@@ -1190,8 +1183,8 @@ object Dedup {
   }
 
   /** The PPJoin candidate self-join over a prefix-posting table —
-    * extracted so the adversarial-density soak (`tools.PrefixSoak`) can
-    * measure the candidate stage the exact code path produces. Condition:
+    * extracted so the candidate stage can be measured on its own (the
+    * adversarial-density soak in SCALE.md). Condition:
     * shared prefix hash + id order + both length filters + the positional
     * bound (a posting matched at ranks (i, j) can contribute at most
     * 1 + min(|A|−i, |B|−j) overlap, which must reach

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * left row") and the point-in-interval range join. Neither exists as a
   * Spark built-in; the naive formulations (a θ-join on `r.ts <= l.ts`, a
   * raw interval predicate) plan as BroadcastNestedLoop/cartesian — exactly
-  * what [[graft.PlanAuditSpec]]'s plan guard forbids. Both operators here
+  * what [[graft.PlanGuardSpec]]'s plan guard forbids. Both operators here
   * compile to ONE equi-shuffle instead.
   *
   * As-of plan shape (the 100 TB story): tag both sides, union, ONE shuffle

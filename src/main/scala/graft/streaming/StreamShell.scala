@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.config.{GraftConfig, KafkaSettings, MsgSettings}
 import graft.operators.{BucketCounts, Decode, Project}
 import graft.store.{GenerationStore, RecentStore}
@@ -46,15 +46,31 @@ object StreamShell {
     * hook (`spark-streaming-kafka-bucket-counter.py:104,116`): a
     * DataFrame→DataFrame step that rewrites `value` from bytes to JSON. */
   def batchCounts(batch: DataFrame, msg: MsgSettings,
-                  valueDecoder: Option[DataFrame => DataFrame] = None): DataFrame = {
-    // Key dropped first, value kept in its RAW type (binary for Avro) —
-    // the decoder runs before the to-string normalization, like the
-    // reference's valueDecoder on raw Kafka bytes (`:104,116`).
-    val values = batch.select(org.apache.spark.sql.functions.col("value"))
-    val decoded = valueDecoder.map(_(values)).getOrElse(values)
-    BucketCounts.countByKey(
-      Decode.decode(Project.dropKey(decoded), "value", msg),
+                  valueDecoder: Option[DataFrame => DataFrame] = None): DataFrame =
+    BucketCounts.countByKey(parse(batch, msg, valueDecoder),
       msg.msgMapSchema.map(_._1) :+ "bucket_start" :+ "bucket_end")
+
+  /** Kafka-shaped frame → decoded message columns. Key dropped first, value
+    * kept in its RAW type (binary for Avro) — the decoder runs before the
+    * to-string normalization, like the reference's valueDecoder on raw
+    * Kafka bytes (`:104,116`). */
+  private def parse(frame: DataFrame, msg: MsgSettings,
+                    valueDecoder: Option[DataFrame => DataFrame]): DataFrame = {
+    val values = frame.select(col("value"))
+    Decode.decode(Project.dropKey(valueDecoder.map(_(values)).getOrElse(values)),
+      "value", msg)
+  }
+
+  /** Start `frame` on `trigger` (default [[defaultTrigger]]), checkpointed
+    * when a dir is given, handing every micro-batch to `onBatch`. */
+  private def start(frame: DataFrame, msg: MsgSettings, outputMode: String,
+                    trigger: Option[Trigger], checkpoint: Option[String])(
+                    onBatch: DataFrame => Unit): StreamingQuery = {
+    val writer = frame.writeStream
+      .outputMode(outputMode)
+      .trigger(trigger.getOrElse(defaultTrigger(msg)))
+      .foreachBatch { (batch: DataFrame, _: Long) => onBatch(batch) }
+    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
 
   /** Attach the counting pipeline to a streaming frame and start it.
@@ -62,22 +78,16 @@ object StreamShell {
   def attach(stream: DataFrame, msg: MsgSettings, store: GenerationStore,
              trigger: Option[Trigger] = None,
              checkpoint: Option[String] = None,
-             valueDecoder: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    var writer: DataStreamWriter[org.apache.spark.sql.Row] = stream.writeStream
-      .trigger(trigger.getOrElse(defaultTrigger(msg)))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // rst_id comes from the store's own restored counter, not batchId:
-        // the reference's generation id survives restarts via MAX(RST_ID)
-        // (`models.py:533-536`), whereas batchId restarts with the checkpoint.
-        // appendStreaming materializes the generation within the trigger
-        // (checkpoint or durable write, per deployment): a lazy plan over
-        // the ephemeral micro-batch would re-read retired source offsets.
-        store.appendStreaming(batchCounts(batch, msg, valueDecoder))
-        ()
-      }
-    checkpoint.foreach(dir => writer = writer.option("checkpointLocation", dir))
-    writer.start()
-  }
+             valueDecoder: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    start(stream, msg, "append", trigger, checkpoint) { batch =>
+      // rst_id comes from the store's own restored counter, not batchId:
+      // the reference's generation id survives restarts via MAX(RST_ID)
+      // (`models.py:533-536`), whereas batchId restarts with the checkpoint.
+      // appendStreaming materializes the generation within the trigger
+      // (checkpoint or durable write, per deployment): a lazy plan over
+      // the ephemeral micro-batch would re-read retired source offsets.
+      store.appendStreaming(batchCounts(batch, msg, valueDecoder))
+    }
 
   /** [[attach]] with exactly-once-by-message-id ingestion — the streaming
     * face of the dedup family: a training-data ingest that must not double-
@@ -97,12 +107,10 @@ object StreamShell {
                     trigger: Option[Trigger] = None,
                     checkpoint: Option[String] = None,
                     valueDecoder: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val values = stream.select(col("value"))
-    val decoded = valueDecoder.map(_(values)).getOrElse(values)
     // Decode must sit in the STREAMING plan here (not inside foreachBatch
     // as attach() has it): the dedup state operator keys on decoded
     // message fields.
-    val parsed = Decode.decode(Project.dropKey(decoded), "value", msg)
+    val parsed = parse(stream, msg, valueDecoder)
       .withColumn("_ets", timestamp_seconds(col("bucket_start")))
       .withWatermark("_ets", lateness)
       .dropDuplicatesWithinWatermark(dedupCols)
@@ -110,20 +118,15 @@ object StreamShell {
     // The id columns exist to dedup on, not to group on: a message id in
     // the count keys would degenerate counts to per-message rows.
     val keyCols = msg.msgMapSchema.map(_._1).filterNot(dedupCols.contains)
-    var writer: DataStreamWriter[org.apache.spark.sql.Row] = parsed.writeStream
-      .trigger(trigger.getOrElse(defaultTrigger(msg)))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val counted = BucketCounts.countByKey(
-          batch, keyCols :+ "bucket_start" :+ "bucket_end")
-        // The stateful dedup operator fires extra DATA-LESS micro-batches
-        // to advance the watermark; blindly appending those would burn a
-        // generation (and a retention tick) per watermark advance. Empty
-        // checks are cheap at micro-batch scale (limit-1 over the agg).
-        if (!counted.isEmpty) store.appendStreaming(counted)
-        ()
-      }
-    checkpoint.foreach(dir => writer = writer.option("checkpointLocation", dir))
-    writer.start()
+    start(parsed, msg, "append", trigger, checkpoint) { batch =>
+      val counted = BucketCounts.countByKey(
+        batch, keyCols :+ "bucket_start" :+ "bucket_end")
+      // The stateful dedup operator fires extra DATA-LESS micro-batches
+      // to advance the watermark; blindly appending those would burn a
+      // generation (and a retention tick) per watermark advance. Empty
+      // checks are cheap at micro-batch scale (limit-1 over the agg).
+      if (!counted.isEmpty) store.appendStreaming(counted)
+    }
   }
 
   /** The UPGRADE-PATH mode (SURVEY.md §2.7): watermarked cross-batch
@@ -144,25 +147,16 @@ object StreamShell {
                         trigger: Option[Trigger] = None,
                         checkpoint: Option[String] = None,
                         valueDecoder: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val values = stream.select(col("value"))
-    val decoded = valueDecoder.map(_(values)).getOrElse(values)
-    val parsed = Decode.decode(Project.dropKey(decoded), "value", msg)
     val keyCols = msg.msgMapSchema.map(_._1)
-    val counts = parsed
+    val counts = parse(stream, msg, valueDecoder)
       .withColumn("_ets", timestamp_seconds(col("bucket_start")))
       .withWatermark("_ets", lateness)
       .groupBy(col("_ets") +: (keyCols :+ "bucket_start" :+ "bucket_end").map(col): _*)
       .count()
       .drop("_ets")
-    var writer: DataStreamWriter[org.apache.spark.sql.Row] = counts.writeStream
-      .outputMode("update")
-      .trigger(trigger.getOrElse(defaultTrigger(msg)))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.appendStreaming(batch) // materialize within trigger: see attach()
-        ()
-      }
-    checkpoint.foreach(dir => writer = writer.option("checkpointLocation", dir))
-    writer.start()
+    start(counts, msg, "update", trigger, checkpoint) { batch =>
+      store.appendStreaming(batch) // materialize within trigger: see attach()
+    }
   }
 
   /** S1/S2 Kafka source (`spark-streaming-kafka-bucket-counter.py:113-121`).

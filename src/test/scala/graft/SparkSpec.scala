@@ -5,15 +5,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark
-  * session startup dominates test time otherwise). */
+  * session startup dominates test time otherwise), built by [[Session]] so
+  * the suites plan the joins and splits that Verify and Bench ship. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.get()
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

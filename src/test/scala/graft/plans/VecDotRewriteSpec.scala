@@ -15,8 +15,7 @@ class VecDotRewriteSpec extends SparkSpec {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[2]")
+      val s = graft.Session.builder()
         .config("spark.sql.extensions", "graft.plans.GraftExtensions")
         .getOrCreate()
       f(s)
