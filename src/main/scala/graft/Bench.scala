@@ -3,10 +3,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: headline queries on SPARK_GRAFT_SF_DIR, one JSON
-  * line on stdout. Results are forced with a `noop`-format write — full
-  * materialization of every output column — rather than `.count()`, which
-  * would let Catalyst prune the measured work down to a parquet metadata
-  * scan (e.g. the whole `from_json` in q_rename_project).
+  * results line on stdout (the [[reported]] queries), and every query's
+  * time in the timings file `target/bench/bench.json`. Results are forced
+  * with a `noop`-format write — full materialization of every output
+  * column — rather than `.count()`, which would let Catalyst prune the
+  * measured work down to a parquet metadata scan (e.g. the whole
+  * `from_json` in q_rename_project).
   *
   * Timing discipline (variance-proofing, VERDICT r8 #1): sf0.001 warm-up
   * pass for JIT/codegen/footer caches, then every query reports the MIN of
@@ -98,11 +100,11 @@ object Bench {
     // explodes, passage-keyed canonical aggregate + join-back, position
     // anti-join, ordered reassembly). Real data volume: corpus × words.
     "q_passage_scrub",
-    // Round-8 LM family (secondary tier — timed + error-gated, not in the
+    // Round-8 LM family (unreported tier — timed + error-gated, not in the
     // driver line): conditional-crossent model join, PMI margins+top-k,
     // DSIR two-model scoring join.
     "q_lm_crossent", "q_pmi_topk", "q_importance_weights",
-    // Round-8 retrieval family (secondary tier like the LM family): BM25
+    // Round-8 retrieval family (unreported tier like the LM family): BM25
     // ranking (filtered explode + broadcast df join + global top-k), the
     // map-only hashed-linear classifier, and hard-negative mining (the
     // cross-label bucketed ANN join).
@@ -130,11 +132,11 @@ object Bench {
     // Round-9: the durable PPJoin index — snapshot build + stored-index
     // batch scoring end to end — and the oracle-verified real-decode
     // query (constructed PGM payloads through the batched decoder). Both
-    // secondary tier; the index's per-batch steady state is isolated in
+    // unreported tier; the index's per-batch steady state is isolated in
     // SCALE.md's soak.
     "q_dedup_prefix_indexed", "q_media_decode",
     // Round-10: real G.711 decode through the batch contract (WAV
-    // container build + µ-law expansion per byte) — secondary tier; the
+    // container build + µ-law expansion per byte) — unreported tier; the
     // A-law twin shares every code path so one bench line suffices.
     // q_media_video_frames: MP4 build + stbl demux + per-frame pixel
     // decode end to end. q_media_decode_bmp: the ImageIO decode path on
@@ -142,7 +144,7 @@ object Bench {
     "q_media_decode_ulaw", "q_media_video_frames", "q_media_decode_bmp",
     // Gopher repetition battery (r10): duplicate-line stats (explode +
     // two map-side-combined aggs) and the top-n-gram char fraction
-    // (tagged explode + max-struct argmax). Secondary tier.
+    // (tagged explode + max-struct argmax). Unreported tier.
     "q_gopher_lines", "q_gopher_topngram",
     // q_media_decode_flac: the full FLAC frame layer (container build +
     // CRC-validated bit-level decode) through the batch contract.
@@ -162,19 +164,19 @@ object Bench {
     // pair search (decode ×4 encodings + Haar transform + banded join +
     // hamming verify — the round's data-volume query, reported).
     "q_crawl_text", "q_audio_fp_pairs",
-    // Round-11 secondary tier: HTTP response parse variants, the WHATWG
+    // Round-11 unreported tier: HTTP response parse variants, the WHATWG
     // entity torture page, main-content extraction, the URL family
     // (normalize / exact-dedup key / domain cap), and the fingerprint
     // transform alone (its pair search above is the reported sibling).
     "q_http_response", "q_html_entities", "q_html_main",
     "q_url_normalize", "q_url_dedup", "q_url_domain_cap",
     "q_audio_fingerprint", "q_robots",
-    // r11 curation/profiling additions — secondary tier, narrow scans.
+    // r11 curation/profiling additions — unreported tier, narrow scans.
     "q_gopher_morph", "q_script_mix", "q_sitemap", "q_html_links", "q_nfc",
     // r11 second wave. Reported: q_redirect_chains (a NEW execution
     // family — the capped iterative equi-join walk with per-round
     // early-exit) and q_crawl_media (sniff-routed HTTP→media/html
-    // fan-out, the integration showpiece). Secondary: the sniff scan,
+    // fan-out, the integration showpiece). Unreported: the sniff scan,
     // canonical/noindex page-meta walks, and revisit digest-join —
     // each a narrow per-partition pass with a reported sibling.
     "q_redirect_chains", "q_crawl_media",
@@ -182,9 +184,9 @@ object Bench {
     // Reported: the PDF extraction chain (object scan → FlateDecode →
     // content-stream text operators) — a NEW format family, nothing
     // else covers its execution shape. Its /Info sibling rides the
-    // secondary tier.
+    // unreported tier.
     "q_pdf_text", "q_pdf_meta",
-    // Secondary: the composed identity pipeline (redirects → canonical
+    // Unreported: the composed identity pipeline (redirects → canonical
     // → normalize; its stages' reported siblings are q_redirect_chains
     // and the URL family) and publish-date extraction (pageMeta walk).
     "q_doc_identity", "q_page_dates", "q_feed_entries",
@@ -192,10 +194,10 @@ object Bench {
     "q_jsonld", "q_fetch_schedule",
     // ObjStm-layout PDF extraction — reported sibling q_pdf_text.
     "q_pdf_objstm",
-    // Per-domain crawl-health rollup (secondary; its stages' reported
+    // Per-domain crawl-health rollup (unreported; its stages' reported
     // siblings cover the execution families).
     "q_crawl_stats",
-    // Sentence segmentation (secondary; narrow scan, q_doc_chunks is the
+    // Sentence segmentation (unreported; narrow scan, q_doc_chunks is the
     // reported packing-family sibling).
     "q_sentences",
     // Round-12: the crawl→media pipe end to end (WARC gzip → HTTP →
@@ -203,29 +205,29 @@ object Bench {
     // Haar fingerprint → banded pair search, both modalities) —
     // REPORTED, it is the round's headline feature and a new execution
     // family (nothing else decodes two modalities in one pass). The
-    // durable-store incremental variant rides the secondary tier (same
+    // durable-store incremental variant rides the unreported tier (same
     // decode+band family plus ParquetStore round-trip).
     "q_crawl_media_dedup", "q_crawl_media_dedup_inc",
-    // Segment-level language ID (secondary; the segmentation core is
+    // Segment-level language ID (unreported; the segmentation core is
     // q_sentences' and the marker arithmetic q_lang_id's — this adds
     // the per-segment fan-out + span/dominant rollup).
     "q_lang_segments", "q_curated_multilang",
-    // Identity-keyed durable dedup (secondary; reported siblings
+    // Identity-keyed durable dedup (unreported; reported siblings
     // q_doc_identity for the composition, q_dedup_prefix_indexed for
     // the durable-store-anti-join shape).
     "q_doc_identity_inc",
-    // Incremental politeness scheduling (secondary; reported sibling
+    // Incremental politeness scheduling (unreported; reported sibling
     // q_fetch_schedule covers the window shape, the store round-trip
     // rides q_doc_identity_inc's family).
     "q_fetch_schedule_inc",
-    // Span-level extraction (secondary; segmentation + dominant rollup
+    // Span-level extraction (unreported; segmentation + dominant rollup
     // siblings q_lang_segments/q_curated_multilang).
     "q_span_extract",
-    // Embedded-font /ToUnicode CMap decode (secondary; reported sibling
+    // Embedded-font /ToUnicode CMap decode (unreported; reported sibling
     // q_pdf_text covers the object-scan/Flate/BT-ET machinery — this
     // adds the per-show-string CMap lookup on top).
     "q_pdf_cmap",
-    // Round-13 wave — all secondary, each with a reported sibling
+    // Round-13 wave — all unreported, each with a reported sibling
     // covering its execution family: robots-store-driven politeness
     // (q_fetch_schedule covers the window, q_fetch_schedule_inc the
     // store round-trip), digest pre-cluster membership + rep-only
@@ -244,7 +246,7 @@ object Bench {
     // WARC export round trip (the write half; reported sibling
     // q_crawl_text covers the read chain it round-trips through).
     "q_warc_export",
-    // Round-14 wave — all secondary, each with a reported sibling
+    // Round-14 wave — all unreported, each with a reported sibling
     // covering its execution family: rename-free incremental mirror
     // pairs against the durable first-seen rep store (sibling
     // q_media_mirror_pairs_inc covers the anti-join + banding; this
@@ -254,7 +256,7 @@ object Bench {
     // digest window + revisit resolution), and the CDX index (same
     // encode chain + the offset-slice re-parse).
     "q_media_mirror_pairs_stable", "q_warc_export_status", "q_warc_cdx",
-    // Round-14 second wave — all secondary with reported siblings:
+    // Round-14 second wave — all unreported with reported siblings:
     // compliance takedown (q_store_merge_durable's touched-generation
     // copy-on-write family, plus the victim-store round-trip + ingest
     // gate), change-rate recrawl + its due slice (one lag window +
@@ -273,7 +275,7 @@ object Bench {
     // robots→sitemap discovery hop (q_robots covers the parse).
     "q_crawl_plan", "q_store_asof", "q_sitemap_recrawl",
     "q_robots_sitemaps",
-    // Round-15 wave — all secondary with reported siblings: the
+    // Round-15 wave — all unreported with reported siblings: the
     // out-of-order stats fold (q_recrawl_inc covers the store fold;
     // this adds the span classification + history-pruned rebuild),
     // export erasure (q_warc_cdx covers the encode + slice machinery,
@@ -290,7 +292,7 @@ object Bench {
     // this adds the range shuffle + block encode + summary-seek
     // verification).
     "q_warc_zipnum",
-    // Round-16 wave — all secondary with reported siblings:
+    // Round-16 wave — all unreported with reported siblings:
     // canonicalized SURT keys (q_warc_cdx_surt covers the key chain;
     // this adds the www/session canonicalization), the takedown-driven
     // zipnum rebuild (q_takedown_export covers the erase, q_warc_zipnum
@@ -308,7 +310,7 @@ object Bench {
     // Round-17 (r16 verdict #8): the production-shaped ring backfill —
     // keep=64 ≪ history, the prefix-algebra branch — REPORTED on the
     // driver line so it tracks the cost production would see; the
-    // keep=100000 interior-gap fixture stays on the secondary tier as
+    // keep=100000 interior-gap fixture stays on the unreported tier as
     // the integrity-tier proof (a correctness trap, not a throughput
     // scenario).
     "q_recrawl_backfill_ring_k64",
@@ -325,133 +327,27 @@ object Bench {
     // benches, on a denser graph).
   )
 
-  /** Subset of [[headline]] rotated OUT of the stdout results line in
-    * round 8 (none are in the original cross-round-comparable 14): they are
-    * still RUN and error-gated every bench — a failure still fails the run —
-    * and their timings print on an EARLY stdout line (far from the driver's
-    * 2000-char tail) plus the per-round timing table in SCALE.md. The
-    * rotation exists because the results line must fit the tail with slack
-    * (see the budget note at the bottom of [[main]]); r7's 67-query line hit
-    * 1820 chars and the driver recorded `parsed: null`. */
-  private[graft] val secondary = Seq(
-    "q_range_join", "q_bucket_sliding", "q_pivot_events", "q_event_cube",
-    "q_salted_join", "q_funnel", "q_cohort", "q_trend", "q_zorder_scan",
-    "q_scd2", "q_snapshot_diff", "q_dedup_incremental", "q_exact_quantiles",
-    "q_sample_pps",
-    // Second rotation wave (stable ≤0.5 s, each with a headline sibling
-    // covering the same execution family): forward as-of (q_asof_join
-    // stays), HLL distinct (q_sliding_distinct stays), quantized ANN
-    // (q_knn_topk/q_knn_bucketed stay), CMS heavy hitters (q_cms_probe
-    // stays), grid densification, and global prefix-sum numbering.
-    "q_asof_forward", "q_approx_distinct", "q_knn_quantized",
-    "q_heavy_hitters", "q_gap_fill", "q_global_ids",
-    // Third wave (round 8, making room for the stream-join metric fields):
-    // the new LM-family queries enter straight into the secondary tier, and
-    // five stable sub-0.7 s queries rotate out of the line — each leaves a
-    // headline sibling covering its execution family (q_embed_incremental →
-    // q_knn_*, q_pii_redact → the narrow-projection originals,
-    // q_store_merge → q_store_select_all/q_store_sql, q_heldout_familiarity
-    // → q_ngram_counts' bigram explode+agg core, q_bloom_anti →
-    // q_cms_probe's sketch family).
-    "q_lm_crossent", "q_pmi_topk", "q_importance_weights",
-    "q_embed_incremental", "q_pii_redact", "q_store_merge",
-    "q_heldout_familiarity", "q_bloom_anti",
-    // Round-8 retrieval family — timed + error-gated, off the driver line.
-    "q_bm25_topk", "q_quality_classifier", "q_hard_negatives",
-    "q_classifier_auc", "q_classifier_calibration",
-    "q_rank_fusion", "q_zipf_slope", "q_score_percentiles",
-    "q_bm25_incremental", "q_classifier_auc_by_lang", "q_epoch_order",
-    "q_dedup_containment", "q_hop_distance", "q_dedup_prefix",
-    "q_dedup_prefix_inc", "q_dedup_recall", "q_profile_modes", "q_ppr",
-    "q_dedup_clusters_exact", "q_weighted_hops", "q_dedup_prefix_indexed",
-    "q_media_decode", "q_media_decode_ulaw", "q_media_video_frames",
-    "q_media_decode_bmp", "q_gopher_lines", "q_gopher_topngram",
-    "q_media_decode_flac", "q_media_frames_ogg", "q_warc_gzip",
-    "q_html_extract",
-    // Round-11 wave: all sub-0.6 s, each with a reported sibling
-    // (q_crawl_text covers the HTTP/HTML chain, q_audio_fp_pairs the
-    // fingerprint family; the URL trio is narrow string work).
-    "q_http_response", "q_html_entities", "q_html_main",
-    "q_url_normalize", "q_url_dedup", "q_url_domain_cap",
-    "q_audio_fingerprint", "q_robots", "q_gopher_morph", "q_script_mix", "q_sitemap",
-    "q_html_links", "q_nfc",
-    // Rotated in r11 to keep the line inside budget: its reported
-    // sibling q_dedup_contamination covers the same gram-explosion +
-    // semi-join family.
-    "q_contamination_score",
-    // r11 second wave (reported siblings: q_crawl_media for the
-    // sniff/route/decode family, q_redirect_chains for the walk).
-    "q_mime_sniff", "q_canonical_dedup", "q_noindex_gate",
-    "q_warc_revisit",
-    // Rotated with the r11 second wave to keep the line inside budget:
-    // q_sliding_distinct's sketch family stays reported via q_cms_probe,
-    // q_star_join's join family via q_sql_join_agg + q_bucketed_join.
-    "q_sliding_distinct", "q_star_join",
-    // PDF /Info extraction — reported sibling q_pdf_text.
-    "q_pdf_meta",
-    // Identity composition + publish dates — stage siblings reported.
-    "q_doc_identity", "q_page_dates",
-    // Feed explode — discovery-family sibling q_sitemap also secondary,
-    // the narrow-scan shape is covered by the reported ingest queries.
-    "q_feed_entries", "q_jsonld", "q_fetch_schedule", "q_pdf_objstm",
-    "q_crawl_stats", "q_sentences",
-    // r12: the incremental media-dedup variant (reported sibling
-    // q_crawl_media_dedup), plus three stable sub-second rotations to
-    // fund the host_speed_factor field and the new reported query —
-    // each leaves a reported sibling covering its execution family:
-    // q_skew_audit's one-Expand agg → q_event_cube, q_concurrency's
-    // window passes → q_session_window/q_scd2, q_table_checksum's
-    // full-table hash agg → q_exact_quantiles' full-table sort.
-    "q_crawl_media_dedup_inc", "q_skew_audit", "q_concurrency",
-    "q_table_checksum", "q_pdf_cmap", "q_lang_segments",
-    "q_curated_multilang", "q_doc_identity_inc", "q_fetch_schedule_inc",
-    "q_span_extract",
-    // r13 wave (see the headline comment for the sibling mapping).
-    "q_fetch_schedule_robots", "q_media_mirrors", "q_media_mirror_pairs",
-    "q_crawl_media_dedup48", "q_pdf_xref",
-    "q_media_mirror_pairs_inc", "q_frontier_gate", "q_warc_export",
-    // r14 wave (see the headline comment for the sibling mapping).
-    "q_media_mirror_pairs_stable", "q_warc_export_status", "q_warc_cdx",
-    "q_takedown", "q_recrawl_rate", "q_recrawl_due", "q_backoff",
-    "q_recrawl_inc", "q_robots_revoke", "q_crawl_plan", "q_store_asof",
-    "q_sitemap_recrawl", "q_robots_sitemaps",
-    // r15 wave (see the headline comment for the sibling mapping).
-    "q_recrawl_backfill", "q_takedown_export", "q_warc_cdx_surt",
-    "q_warc_export_inc", "q_crawl_loop", "q_warc_zipnum",
-    // r16 wave (see the headline comment for the sibling mapping).
-    "q_warc_cdx_canon", "q_takedown_zipnum", "q_recrawl_backfill_ring",
-    "q_warc_zipnum_join", "q_takedown_attest",
-    // r17 rotation funding the reported k64 ring entry: the banded
-    // hamming self-join family stays reported via q_crawl_media_dedup
-    // (which includes the phash + banding machinery end to end);
-    // q_media_phash_pairs has been flat since r6. q_pack_sequences'
-    // packing family stays reported via q_doc_chunks (flat since r5).
-    "q_media_phash_pairs", "q_pack_sequences",
-    // r17 second wave (see the headline comment for the sibling
-    // mapping).
-    "q_warc_zipnum_prefix")
-
-  /** The secondary entries that STAY on the tail-visible stdout line:
-    * the newest wave(s), whose round-over-round movement the judge
-    * reads from the driver tail. Everything else in [[secondary]] is
-    * ARCHIVED (r16 verdict #7): still run and error-gated every bench,
-    * timings printed at full precision on an `{"archived":…}` stdout
-    * line emitted right after the query sweep — tens of seconds (the
-    * stream benches + heal phase) before the final two lines, so the
-    * driver's 2000-char tail keeps BOTH final lines complete instead
-    * of cutting the secondary line mid-entry (r13–r16 tails all did).
-    * Rotation policy: an entry leaves this list once its timing has
-    * been flat for two rounds; SCALE.md's per-round timing table
-    * keeps the rotated histories. */
-  private[graft] val recentSecondary = Seq(
-    // q_takedown_attest rotated to archived in r17 (funding the new
-    // prefix-scan entry): flat at 1.44 s across the r16 and r17
-    // round-final runs — the two-round policy bar.
-    "q_warc_cdx_canon", "q_takedown_zipnum", "q_recrawl_backfill_ring",
-    "q_warc_zipnum_join", "q_warc_zipnum_prefix")
-
-  private[graft] val archived: Seq[String] =
-    secondary.filterNot(recentSecondary.toSet)
+  /** The [[headline]] queries whose times ride the stdout results line, in
+    * headline order. The line must fit a 2000-char tail of stdout+stderr
+    * (r7's 67-query line hit 1820 chars and was recorded as `parsed:
+    * null`), so it carries these 42 — the original cross-round 14 plus 28
+    * execution-family representatives. Every other headline query is
+    * timed and error-gated the same way; its time is in the timings file
+    * (`target/bench/bench.json`, [[timingsJson]]) and counts in `total`. */
+  private[graft] val reported = Seq(
+    "q_count_by_key", "q_bucket_counts", "q_bucket_counts_fine",
+    "q_rename_project", "q_append_count_json", "q_decode_bucket",
+    "q_store_select_all", "q_store_sql", "q_text_stats", "q_ngram_counts",
+    "q_dedup_near", "q_knn_topk", "q_knn_bucketed", "q_sql_join_agg",
+    "q_dedup_clusters", "q_tfidf_topk", "q_simhash_pairs",
+    "q_curated_corpus", "q_dedup_contamination", "q_asof_join",
+    "q_bucketed_join", "q_doc_chunks", "q_session_window",
+    "q_latest_per_key", "q_cms_probe", "q_fuzzy_join", "q_dup_passages",
+    "q_triangles", "q_pagerank", "q_label_prop", "q_bpe_merges",
+    "q_cluster_representatives", "q_split_leakage", "q_kcore",
+    "q_passage_scrub", "q_crawl_text", "q_audio_fp_pairs",
+    "q_redirect_chains", "q_crawl_media", "q_pdf_text",
+    "q_crawl_media_dedup", "q_recrawl_backfill_ring_k64")
 
   private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -511,6 +407,13 @@ object Bench {
   private[graft] def calibrationPhase(n: Int = 3): Double =
     (1 to n).map(_ => calibrationRun()).min
 
+  /** The min over the (before, mid, after) phases: the least-contended
+    * observation of the host's single-thread floor — uniform ambient
+    * slowness shows in every phase, so the min still reports it, while a
+    * one-sided burst cannot inflate the factor. */
+  private[graft] def hostSpeedFactor(cal: (Double, Double, Double)): Double =
+    Seq(cal._1, cal._2, cal._3).min / CalibrationRefSec
+
   /** The I/O twin of [[calibrationRun]] (r12 round-final finding: all
     * three STATEFUL stream benches dropped 2–3× below their recordings
     * while the CPU canary read 0.96 and stateless ingest held — HDFS-
@@ -542,12 +445,42 @@ object Bench {
 
   /** [[ioCalibrationRun]] reference seconds, recorded 2026-08-15 on the
     * round-12 build box (min of 5 on a calm interval). The I/O factor
-    * rides the UNBUDGETED secondary line — it adjudicates the stateful
-    * stream benches, whose commit path is sync-write-bound. */
+    * adjudicates the stateful stream benches, whose commit path is
+    * sync-write-bound. */
   private[graft] val IoCalibrationRefSec: Double = 0.064
 
   private[graft] def ioCalibrationPhase(n: Int = 3): Double =
     (1 to n).map(_ => ioCalibrationRun()).min
+
+  /** Over the (before, after) bracket of the stream benches. max, not
+    * min: the factor EXCUSES slow stateful benches, so it must report the
+    * worst endpoint — turbulence at either probe is evidence the benches
+    * between them ran under it. */
+  private[graft] def ioFactor(io: (Double, Double)): Double =
+    math.max(io._1, io._2) / IoCalibrationRefSec
+
+  /** The timings file's content: every query's healed min seconds at ms
+    * precision (-1 on failure, its error class under `errors`), the
+    * canary samples with their references, and the two factors. */
+  private[graft] def timingsJson(results: Seq[(String, Double, Option[String])],
+                                 cal: (Double, Double, Double),
+                                 io: (Double, Double)): String = {
+    def ms(v: Double): String = f"$v%.3f"
+    def obj(entries: Seq[String]): String =
+      if (entries.isEmpty) "{}" else entries.mkString("{\n", ",\n", "\n  }")
+    val queries = results.map { case (n, v, err) =>
+      s"""    "$n": ${if (err.isEmpty) ms(v) else "-1"}""" }
+    val errors = results.collect { case (n, _, Some(e)) => s"""    "$n": "$e"""" }
+    s"""{
+       |  "queries": ${obj(queries)},
+       |  "errors": ${obj(errors)},
+       |  "calibration": {"before": ${ms(cal._1)}, "mid": ${ms(cal._2)}, "after": ${ms(cal._3)}, "ref": ${ms(CalibrationRefSec)}},
+       |  "io_calibration": {"before": ${ms(io._1)}, "after": ${ms(io._2)}, "ref": ${ms(IoCalibrationRefSec)}},
+       |  "io_factor": ${f"${ioFactor(io)}%.2f"},
+       |  "host_speed_factor": ${f"${hostSpeedFactor(cal)}%.2f"}
+       |}
+       |""".stripMargin
+  }
 
   /** Stage the events fixture SPLIT into 8 parquet files in a temp dir
     * (the file source needs a DIRECTORY; 2 files/trigger ⇒ 4 real
@@ -789,7 +722,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Host-speed canary, phase 1 of 2 (the second runs after the sweep):
+    // Host-speed canary, phase 1 of 3 (mid-sweep and after the sweep):
     // the factor self-normalizes the driver line against ambient host
     // drift — the judge has had to re-measure "regressions" on unchanged
     // code three rounds running.
@@ -800,13 +733,13 @@ object Bench {
     val spark = Session.get()
     // A headline name that no longer resolves must fail the run, not
     // silently shrink the bench (the same pass-by-omission hazard as
-    // round 6's Verify gap). `secondary` is a SUBSET of `headline`: every
-    // secondary query still runs and error-gates; it is only excluded from
-    // the tail-budgeted stdout results line.
+    // round 6's Verify gap). `reported` is a SUBSET of `headline`: every
+    // headline query runs and error-gates; `reported` only picks the ones
+    // the tail-budgeted stdout results line carries.
     val unknown = headline.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"headline names not in SparkEntry.queries: $unknown")
-    val stray = secondary.filterNot(headline.contains)
-    require(stray.isEmpty, s"secondary names not in headline: $stray")
+    val stray = reported.filterNot(headline.contains)
+    require(stray.isEmpty, s"reported names not in headline: $stray")
     val queries = headline.map(n => n -> SparkEntry.queries(n))
     queries.foreach { case (_, fn) => warmUp(spark, fn) }
     // A failing query must NOT masquerade as a fast one: it reports -1 in
@@ -842,18 +775,6 @@ object Bench {
     val phase1a = timeAll(queries.take(half))
     val calMid = calibrationPhase()
     val phase1 = phase1a ++ timeAll(queries.drop(half))
-    val archivedSet = archived.toSet
-    // Archived-tier timings (r16 verdict #7): full precision, printed
-    // HERE — the stream benches, heal phase, and calibration all land
-    // after this line, pushing it out of the driver's 2000-char tail so
-    // the two FINAL lines arrive complete. Values are the phase-1 mins;
-    // an archived query flagged by the heal phase logs its tightened
-    // number to stderr (heals only ever tighten).
-    println(phase1.filter(r => archivedSet(r._1)).map { case (k, v, err) =>
-      s"\"" + k + "\":" + (if (err.isEmpty) f"$v%.3f" else "-1")
-    }.mkString("{\"archived\":{", ",", "}}"))
-    System.err.println(s"[bench] archived tier: ${archived.size} queries " +
-      "timed above (error-gated, off the tail-budget lines)")
     def sec(v: Double): String = f"$v%.1f"
     // Min-of-≥2 WITH the same 1.5× disagreement escalation the query tier
     // got (r10 — the r9 driver run recorded all four stream rates 7-20%
@@ -907,32 +828,14 @@ object Bench {
     // pass. Re-run the flagged outliers once each, min across phases.
     val allResults = healOutliers(phase1,
       name => once(SparkEntry.queries(name)))
-    // Host-speed canary, phase 2: the sweep is over; the min across both
-    // phases is the least-contended observation of the host's current
-    // single-thread floor — uniform ambient slowness shows in BOTH, so
-    // the min still reports it, while a one-sided burst cannot inflate
-    // the factor.
+    // Host-speed canary, phase 3: the sweep is over ([[hostSpeedFactor]]
+    // takes the min over all three phases).
     val calAfter = calibrationPhase()
-    val hostSpeed = Seq(calBefore, calMid, calAfter).min / CalibrationRefSec
-    val (secondaryResults, results) =
-      allResults.partition { case (n, _, _) => secondary.contains(n) }
-    // Secondary timings — the RECENT (non-archived) entries only: full
-    // precision, printed BEFORE the final results line. Both lines must
-    // fit the driver's 2000-char tail TOGETHER (the combined gate at the
-    // bottom); the archived tier already printed far above. The canary's
-    // three phase samples ride this line.
-    val secondaryLine = secondaryResults
-      .filterNot(r => archivedSet(r._1)).map { case (k, v, err) =>
-      s"\"" + k + "\":" + (if (err.isEmpty) f"$v%.3f" else "-1")
-    }.mkString("{\"secondary\":{", ",", "}," +
-      f""""calibration":{"before":$calBefore%.3f,"mid":$calMid%.3f,""" +
-      f""""after":$calAfter%.3f,"ref":$CalibrationRefSec%.3f},""" +
-      f""""io_calibration":{"before":$ioBefore%.3f,"after":$ioAfter%.3f,""" +
-      f""""ref":$IoCalibrationRefSec%.3f,""" +
-      // max, not min: the factor EXCUSES slow stateful benches, so it
-      // must report the worst bracket endpoint — turbulence at either
-      // probe is evidence the benches between them ran under it.
-      f""""io_factor":${math.max(ioBefore, ioAfter) / IoCalibrationRefSec}%.2f}}""")
+    val cal = (calBefore, calMid, calAfter)
+    val io = (ioBefore, ioAfter)
+    val hostSpeed = hostSpeedFactor(cal)
+    val reportedSet = reported.toSet
+    val results = allResults.filter { case (n, _, _) => reportedSet(n) }
     // Tail-budget rounding: the driver keeps only a 2000-char TAIL of
     // combined stdout+stderr, so the results line must fit WITH slack for
     // sbt's trailing "[success]" line and any late log lines. 100 ms
@@ -959,28 +862,28 @@ object Bench {
       s""""stream_join_rows":$joinRows,"stream_join_sec":${sec(joinSec)},""" +
       s""""stream_join_rows_per_s":${rate(joinRps)},""" +
       f""""host_speed_factor":$hostSpeed%.2f,"sf":"$sfDir"}"""
-    // Stop Spark BEFORE printing the final lines: shutdown-path WARNs go
+    // Stop Spark BEFORE printing the final line: shutdown-path WARNs go
     // to stderr, and the driver tails the COMBINED stream — anything
-    // logged after them eats their tail budget from the near side.
+    // logged after it eats its tail budget from the near side.
     spark.stop()
-    println(secondaryLine)
+    val timings = java.nio.file.Paths.get("target", "bench", "bench.json")
+    java.nio.file.Files.createDirectories(timings.getParent)
+    java.nio.file.Files.write(timings, timingsJson(allResults, cal, io)
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    System.err.println(f"[bench] timings: ${timings.toAbsolutePath} " +
+      f"host_speed_factor=$hostSpeed%.2f io_factor=${ioFactor(io)}%.2f")
     println(line)
     // Tail-budget gate, hard like the other loud-failure gates (ADVICE r7:
     // the 1800-char stderr warning shipped rc=0 with parsed:null). Budget:
-    // both FINAL lines must arrive complete in the 2000-char tail (r16
-    // verdict #7 — r13–r16 tails all cut the secondary line mid-entry):
-    // 2000 − ~80 for sbt's trailing "[success]" line − 2 × "[info] "
-    // prefixes − slack for a stray late log line ⇒ combined ≤ 1800, and
-    // the results line alone stays ≤ 1500 as before. Adding a query
-    // family without rotating one into `secondary`/`archived` breaks
-    // BenchSpec first, then this.
-    val overBudget = line.length > 1500 ||
-      secondaryLine.length + line.length > 1800
+    // 2000 − ~80 for sbt's trailing "[success]" line − the "[info] "
+    // prefix − slack for a stray late log line ⇒ the results line stays
+    // ≤ 1500. Adding a name to `reported` without room breaks BenchSpec
+    // first, then this.
+    val overBudget = line.length > 1500
     if (overBudget) System.err.println(
-      s"[bench] FATAL: results line ${line.length} chars / combined " +
-        s"${secondaryLine.length + line.length} (> 1500 / 1800 budget) " +
-        "— the driver tails 2000 of stdout+stderr; rotate queries into " +
-        "Bench.secondary/archived or trim precision")
+      s"[bench] FATAL: results line ${line.length} chars (> 1500 budget) " +
+        "— only a 2000-char tail of stdout+stderr is kept; take names out of " +
+        "Bench.reported or trim precision")
     // A round with ANY failed query, dead streaming path, or over-budget
     // line must not report success — round 6 shipped rc=0 with 15 broken
     // queries and 0-row streams, and downstream tooling read it as a green

@@ -79,7 +79,15 @@ final case class StoreSettings(
     /** Serving-store schema `{column -> sql type}` analog of `sqlite_schema`
       * (`README.md:98-108`); compiled once to a StructType. */
     schema: Seq[(String, String)] = Seq.empty
-)
+) {
+  /** Both come from the `.ini`: `clean_freq = 0` would throw in the
+    * retention cadence (`counter % cleanFreq`) inside the first
+    * micro-batch and kill the stream, and a negative `clean_interval`
+    * would set the retention floor above the counter, deleting the
+    * generation just written. */
+  require(cleanFreq > 0, s"clean_freq must be positive, got $cleanFreq")
+  require(cleanInterval >= 0, s"clean_interval must be non-negative, got $cleanInterval")
+}
 
 final case class GraftConfig(
     kafka: KafkaSettings = KafkaSettings(),

@@ -423,9 +423,7 @@ final class ParquetStore(
     * bare filesystem can express. */
   def merge(batch: DataFrame, keys: Seq[String]): this.type = this.synchronized {
     checkFence()
-    require(keys.nonEmpty, "merge needs at least one key column")
-    keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"merge key '$k' is not a store column (${schema.fieldNames.mkString(",")})"))
+    requireKeyColumns("merge", keys)
     val aligned = schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name))
     // Pinned: read once per touched generation + once for the append —
     // and never re-derived from source files the rewrites may replace.
@@ -459,16 +457,11 @@ final class ParquetStore(
   def eraseKeys(victims: DataFrame, keys: Seq[String]): Long =
     this.synchronized {
       checkFence()
-      require(keys.nonEmpty, "erase needs at least one key column")
-      keys.foreach(k => require(schema.fieldNames.contains(k),
-        s"erase key '$k' is not a store column (${schema.fieldNames.mkString(",")})"))
-      val victimKeys = victims
+      requireKeyColumns("erase", keys)
+      eraseKeysPinned(victims
         .select(keys.map(k => col(k).cast(
           schema(k).dataType).as(k)).toIndexedSeq: _*)
-        .distinct().localCheckpoint(eager = true)
-      val n = rewriteWithoutKeys(victimKeys, keys)
-      registerView()
-      n
+        .distinct().localCheckpoint(eager = true), keys)
     }
 
   /** [[eraseKeys]] for a victim frame the caller has ALREADY pinned
@@ -483,9 +476,7 @@ final class ParquetStore(
                                      keys: Seq[String]): Long =
     this.synchronized {
       checkFence()
-      require(keys.nonEmpty, "erase needs at least one key column")
-      keys.foreach(k => require(schema.fieldNames.contains(k),
-        s"erase key '$k' is not a store column (${schema.fieldNames.mkString(",")})"))
+      requireKeyColumns("erase", keys)
       val n = rewriteWithoutKeys(victimKeys, keys)
       registerView()
       n
@@ -622,6 +613,40 @@ final class ParquetStore(
     }
   }
 
+  /** The fail-fast key guard of every keyed mutator (`op` names it in
+    * the message). */
+  private def requireKeyColumns(op: String, keys: Seq[String]): Unit = {
+    require(keys.nonEmpty, s"$op needs at least one key column")
+    keys.foreach(k => require(schema.fieldNames.contains(k),
+      s"$op key '$k' is not a store column (${schema.fieldNames.mkString(",")})"))
+  }
+
+  /** Replace generation `g` with `rows`: stage to `.staging_<tag>_<g>`,
+    * delete the original, atomic rename. A failed staged write deletes
+    * the staging; a failure after the delete leaves the staged copy as
+    * the only copy — plain-rename fallback, else it stays on disk for
+    * reopen recovery ([[recoverCrashedSwaps]]) or operators. */
+  private def swapGeneration(desc: String, tag: String, g: Long,
+                             rows: => DataFrame): Unit = {
+    val staging = fs.resolve(path, s".staging_${tag}_$g")
+    val original = fs.resolve(path, s"rst_id=$g")
+    var originalDeleted = false
+    try {
+      described(desc)(rows.write.mode("overwrite").parquet(staging))
+      fs.deleteRecursively(original)
+      originalDeleted = true
+      fs.rename(staging, original)
+    } catch { case e: Throwable =>
+      if (!originalDeleted) {
+        if (fs.exists(staging)) fs.deleteRecursively(staging)
+      } else if (fs.exists(staging)) {
+        try fs.rename(staging, original)
+        catch { case _: Throwable => () }
+      }
+      throw e
+    }
+  }
+
   /** Parquet files currently making up generation `rstId` (0 when the
     * generation is absent) — the small-files health signal [[compact]]
     * acts on. */
@@ -645,28 +670,8 @@ final class ParquetStore(
     checkFence()
     require(numFiles >= 1, "numFiles must be positive")
     if (generationIds().contains(rstId)) {
-      val staging = fs.resolve(path, s".staging_cp_$rstId")
-      val original = fs.resolve(path, s"rst_id=$rstId")
-      var originalDeleted = false
-      try {
-        described("compact")(
-          raw(Some(col("rst_id") === rstId)).drop("rst_id")
-            .repartition(numFiles)
-            .write.mode("overwrite").parquet(staging))
-        fs.deleteRecursively(original)
-        originalDeleted = true
-        fs.rename(staging, original)
-      } catch { case e: Throwable =>
-        if (!originalDeleted) {
-          if (fs.exists(staging)) fs.deleteRecursively(staging)
-        } else if (fs.exists(staging)) {
-          // The staged copy is now the only copy — same recovery contract
-          // as merge: plain-rename fallback, else leave it for operators.
-          try fs.rename(staging, original)
-          catch { case _: Throwable => () }
-        }
-        throw e
-      }
+      swapGeneration("compact", "cp", rstId,
+        raw(Some(col("rst_id") === rstId)).drop("rst_id").repartition(numFiles))
       registerView()
     }
     this
@@ -720,9 +725,7 @@ final class ParquetStore(
   def collapseToLatest(keys: Seq[String], keepRecent: Int = 1): this.type =
     this.synchronized {
       checkFence()
-      require(keys.nonEmpty, "collapse needs at least one key column")
-      keys.foreach(k => require(schema.fieldNames.contains(k),
-        s"collapse key '$k' is not a store column (${schema.fieldNames.mkString(",")})"))
+      requireKeyColumns("collapse", keys)
       val gens = generationIds()
       // The fold target never passes a LIVE as-of stamp (r14 verdict
       // #5): policyAsOf(rst) stays exact as long as some generation
@@ -742,26 +745,7 @@ final class ParquetStore(
               .orderBy(col("rst_id").desc)))
           .filter(col("_rk") === 1)
           .drop("_rk", "rst_id")
-        val staging = fs.resolve(path, s".staging_cl_$target")
-        val original = fs.resolve(path, s"rst_id=$target")
-        var originalDeleted = false
-        try {
-          described("collapse")(base.write.mode("overwrite").parquet(staging))
-          fs.deleteRecursively(original)
-          originalDeleted = true
-          fs.rename(staging, original)
-        } catch { case e: Throwable =>
-          if (!originalDeleted) {
-            if (fs.exists(staging)) fs.deleteRecursively(staging)
-          } else if (fs.exists(staging)) {
-            // Same recovery contract as merge/compact: the staged copy
-            // is the only full copy now — plain-rename fallback, else
-            // leave it on disk for operators.
-            try fs.rename(staging, original)
-            catch { case _: Throwable => () }
-          }
-          throw e
-        }
+        swapGeneration("collapse", "cl", target, base)
         // Older generations are now subsumed — delete is pure cleanup
         // and crash-resumable.
         toCollapse.init.foreach { g =>

@@ -2,13 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Static guards for [[Bench]]'s stdout contract. The driver keeps only a
-  * 2000-char TAIL of combined stdout+stderr; the results line must fit with
-  * slack for sbt's trailing "[success]" line and stray late log lines.
-  * Round 7 shipped a 1820-char line the driver recorded as `parsed: null` —
-  * this spec makes headline growth fail `sbt test` BEFORE a round ships,
-  * and Bench's runtime gate (hard exit at >1500) backstops format drift
-  * this spec's template might miss.
+/** Static guards for [[Bench]]'s stdout contract and its timings file. Only
+  * a 2000-char TAIL of combined stdout+stderr is kept; the results line must
+  * fit with slack for sbt's trailing "[success]" line and stray late log
+  * lines. Round 7 shipped a 1820-char line that was recorded as
+  * `parsed: null` — this spec makes growth of [[Bench.reported]] fail
+  * `sbt test` BEFORE a round ships, and Bench's runtime gate (hard exit at
+  * >1500) backstops format drift this spec's template might miss.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -19,20 +19,19 @@ class BenchSpec extends AnyFunSuite {
     "q_store_select_all", "q_store_sql", "q_text_stats", "q_ngram_counts",
     "q_dedup_near", "q_knn_topk", "q_knn_bucketed", "q_sql_join_agg")
 
-  test("every bench name resolves and secondary is a headline subset") {
+  test("every bench name resolves and reported is a headline subset") {
     val unknown = Bench.headline.filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"bench names not in SparkEntry.queries: $unknown")
     assert(Bench.headline.distinct.size == Bench.headline.size,
       "duplicate headline names")
-    assert(Bench.secondary.distinct.size == Bench.secondary.size,
-      "duplicate secondary names")
-    val stray = Bench.secondary.filterNot(Bench.headline.contains)
-    assert(stray.isEmpty, s"secondary names not in headline: $stray")
+    assert(Bench.reported.distinct.size == Bench.reported.size,
+      "duplicate reported names")
+    val stray = Bench.reported.filterNot(Bench.headline.contains)
+    assert(stray.isEmpty, s"reported names not in headline: $stray")
   }
 
   test("the original 14 cross-round queries stay in the reported headline") {
-    val reported = Bench.headline.filterNot(Bench.secondary.contains)
-    val missing = original14.filterNot(reported.contains)
+    val missing = original14.filterNot(Bench.reported.contains)
     assert(missing.isEmpty, s"original-14 queries rotated out: $missing")
   }
 
@@ -43,8 +42,7 @@ class BenchSpec extends AnyFunSuite {
     // template drifts from Bench.main, the runtime >1500 hard gate still
     // fires — but this assert is the one that fails in `sbt test`, a round
     // earlier.
-    val reported = Bench.headline.filterNot(Bench.secondary.contains)
-    val qs = reported.map(n => s""""$n":99.9""").mkString("{", ",", "}")
+    val qs = Bench.reported.map(n => s""""$n":99.9""").mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":999.9,"unit":"sec","queries":$qs,"errors":{},""" +
       s""""stream_rows":9999999,"stream_sec":9999.9,"stream_rows_per_s":9999999.9,""" +
@@ -57,31 +55,35 @@ class BenchSpec extends AnyFunSuite {
       s""""host_speed_factor":99.99,"sf":"/root/testdata/sf0.1"}"""
     assert(line.length <= 1450,
       s"worst-case results line is ${line.length} chars (> 1450 spec budget; " +
-        "runtime hard gate is 1500) — rotate queries into Bench.secondary")
-
-    // r17 (r16 verdict #7): BOTH final lines must arrive complete in the
-    // driver's 2000-char tail — the non-archived secondary line rides it
-    // too. Pessimistic widths: every displayed secondary entry at
-    // 999.999 (wider than -1 and any recorded timing), every calibration
-    // sample at 99.999.
-    val displayed = Bench.secondary.filterNot(Bench.archived.contains)
-    val secondaryLine = displayed.map(n => s""""$n":999.999""")
-      .mkString("{\"secondary\":{", ",", "},") +
-      """"calibration":{"before":99.999,"mid":99.999,"after":99.999,""" +
-      """"ref":99.999},"io_calibration":{"before":99.999,"after":99.999,""" +
-      """"ref":99.999,"io_factor":99.99}}"""
-    assert(secondaryLine.length + line.length <= 1750,
-      s"worst-case final two lines are ${secondaryLine.length + line.length} " +
-        "chars combined (> 1750 spec budget; runtime hard gate is 1800) — " +
-        "rotate stable secondary entries into Bench.archived")
+        "runtime hard gate is 1500) — take names out of Bench.reported")
   }
 
-  test("archived is a secondary subset and the recent waves stay displayed") {
-    val strayArch = Bench.archived.filterNot(Bench.secondary.contains)
-    assert(strayArch.isEmpty, s"archived names not in secondary: $strayArch")
-    val strayRecent = Bench.recentSecondary.filterNot(Bench.secondary.contains)
-    assert(strayRecent.isEmpty,
-      s"recentSecondary names not in secondary: $strayRecent")
+  test("timings file: every query once, failures as -1 with their error, canary fields") {
+    val results: Seq[(String, Double, Option[String])] = Seq(
+      ("q_a", 0.1234, None), ("q_b", 12.5, None),
+      ("q_c", 3.0, Some("java.lang.IllegalStateException")))
+    val json = Bench.timingsJson(results, (0.5, 0.6, 0.7), (0.08, 0.096))
+    // Strict parsing rejects a repeated key, so each name is there once.
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.core.JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+      .readTree(json)
+    val queries = root.get("queries")
+    val names = Seq.newBuilder[String]
+    queries.fieldNames().forEachRemaining(n => names += n)
+    assert(names.result() == results.map(_._1))
+    assert(queries.get("q_a").asDouble == 0.123)
+    assert(queries.get("q_b").asDouble == 12.5)
+    assert(queries.get("q_c").asDouble == -1.0)
+    assert(root.get("errors").size == 1)
+    assert(root.get("errors").get("q_c").asText == "java.lang.IllegalStateException")
+    val cal = root.get("calibration")
+    assert(Seq("before", "mid", "after").map(cal.get(_).asDouble) == Seq(0.5, 0.6, 0.7))
+    assert(cal.get("ref").asDouble == Bench.CalibrationRefSec)
+    val io = root.get("io_calibration")
+    assert(Seq("before", "after").map(io.get(_).asDouble) == Seq(0.08, 0.096))
+    assert(io.get("ref").asDouble == Bench.IoCalibrationRefSec)
+    assert(math.abs(root.get("io_factor").asDouble - 0.096 / Bench.IoCalibrationRefSec) < 0.006)
+    assert(math.abs(root.get("host_speed_factor").asDouble - 0.5 / Bench.CalibrationRefSec) < 0.006)
   }
 
   test("host-speed canary: synthetic load moves the factor while normalized times hold") {

@@ -55,6 +55,15 @@ class GraftConfigSpec extends AnyFunSuite {
     MsgSettings(bucketInterval = 20) // divides 86400 — fine
   }
 
+  test("clean_freq must be positive and clean_interval non-negative") {
+    def store(kv: String) = GraftConfig.fromIni(s"[HTTPEndpointSetting]\n$kv\n").store
+    intercept[IllegalArgumentException](store("clean_freq = 0"))
+    intercept[IllegalArgumentException](store("clean_freq = -3"))
+    intercept[IllegalArgumentException](store("clean_interval = -1"))
+    assert(store("clean_interval = 0").cleanInterval === 0)
+    assert(store("clean_freq = 1").cleanFreq === 1)
+  }
+
   test("msg map → from_json schema includes bucket field once, all strings") {
     val st = GraftConfig.msgMapToJsonSchema(
       Seq("a" -> "x", "b" -> "timestamp"), "timestamp")
