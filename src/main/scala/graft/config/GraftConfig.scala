@@ -66,6 +66,17 @@ final case class MsgSettings(
   require(bucketInterval > 0, s"bucket_interval must be positive, got $bucketInterval")
   require(86400 % bucketInterval == 0,
     s"bucket_interval must evenly divide 86400 (reference README.md:44), got $bucketInterval")
+  /** Targets become columns beside `bucket_start`, `bucket_end`, the
+    * counter's `count` and the store's `rst_id`: a clash or a repeat
+    * (case-blind, like Spark's resolution) is an ambiguous reference that
+    * kills the stream in its first micro-batch. */
+  locally {
+    val targets = msgMapSchema.map(_._1.toLowerCase)
+    val reserved = Set("count", "bucket_start", "bucket_end", "rst_id")
+    require(targets.distinct.size == targets.size && !targets.exists(reserved),
+      s"msg_map_schema targets must be distinct and none of " +
+        s"${reserved.mkString(", ")}, got ${targets.mkString(", ")}")
+  }
 }
 
 final case class StoreSettings(

@@ -35,18 +35,12 @@ object Decode {
     }.foldLeft((0L, 0L)) { case ((a, b), (x, y)) => (a + x, b + y) }
 
   /** Parse a JSON string column into the projected source fields (all strings —
-    * the reference treats values opaquely, SURVEY.md §1.2).
-    *
-    * `_parsed` is produced through an `explode(array(...))` generator
-    * barrier: `from_json` is CodegenFallback (no subexpression elimination),
-    * and a plain `withColumn` gets inlined by `CollapseProject` into every
-    * downstream field access — re-parsing the JSON once per referenced
-    * field. A Generate operator evaluates the parse exactly once per row and
-    * downstream references are free attribute lookups (measured ~4× on the
-    * full decode path). `array(x)` is always one element, so no rows are
-    * added or dropped. */
+    * the reference treats values opaquely, SURVEY.md §1.2) as one struct
+    * column `_parsed`. A plain projection parses once per row: `CollapseProject`
+    * does not inline the non-cheap `from_json` into several field references
+    * (`PlanDump`: one `from_json` each in `q_decode_bucket`, `q_rename_project`). */
   def parseJson(df: DataFrame, valueCol: String, schema: StructType): DataFrame =
-    df.select(col("*"), explode(array(from_json(col(valueCol), schema))).as("_parsed"))
+    df.select(col("*"), from_json(col(valueCol), schema).as("_parsed"))
 
   /** Full decode pipeline for a frame of raw JSON strings in `valueCol`:
     * returns exactly (projected columns ..., bucket_start, bucket_end). */

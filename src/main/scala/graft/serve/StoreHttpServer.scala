@@ -110,7 +110,6 @@ final class StoreHttpServer(store: GenerationStore,
         // Restore the raw view: the server must not change what
         // non-HTTP readers of the session see.
         store.selectAll.createOrReplaceTempView(store.tableName)
-        ()
       }
     }
 
@@ -208,21 +207,15 @@ final class StoreHttpServer(store: GenerationStore,
           throw new IllegalArgumentException(
             "no archive directory configured for /replay"))
         val key = dec(rest.mkString("/"))
-        val notFound = (404, "application/json",
-          "{\"error\": \"no capture\"}".getBytes(UTF_8),
-          Seq.empty[(String, String)])
-        val victims = takedown match {
-          case Some((td, _)) => victimSet(td)
-          case None => Set.empty[String]
-        }
         graft.sources.Warc.replayCapture(cluster, archives, key,
           ts = if (ts == "*") null else dec(ts),
-          victims = victims) match {
+          victims = victims()) match {
           case Some(c) =>
             (200, c.mime, c.body, Seq(
               "X-Archive-Status" -> c.status.toString,
               "X-Archive-Timestamp" -> c.timestamp))
-          case None => notFound
+          case None => (404, "application/json",
+            "{\"error\": \"no capture\"}".getBytes(UTF_8), Seq.empty)
         }
       case other => throw new IllegalArgumentException(
         s"no route for /${other.mkString("/")}")
@@ -256,33 +249,26 @@ final class StoreHttpServer(store: GenerationStore,
       }
     }.toMap
 
-  /** The `/cdx` victim-set cache (r16 verdict #6 / advice #3):
-    * [[graft.store.Takedown.victimKeys]]`.collect()` is a full Spark
-    * job, and running it per HTTP request made lookup latency on the
-    * serving-path primitive driver-job-bound. Keyed on the victim
-    * store's `(counter, generation listing)`: a new takedown request
-    * advances the counter, an erase/collapse/reset changes the
-    * listing — either invalidates — plus the store's same-JVM
-    * mutation stamp (review r17), which catches IN-PLACE rewrites
-    * (an eraseKeys/compact/collapse on the victim store keeps both
-    * the counter and the generation ids). The listing is one
-    * directory scan per request instead of a Spark job; cross-process
-    * writers are outside the stamp's scope (single-writer store
-    * contract). */
-  @volatile private var victimCache: ((Long, Seq[Long], Long), Set[String]) = null
+  /** The banned-key set `/cdx` and `/replay` scrub lines against (empty
+    * without a takedown pair), cached because [[graft.store.Takedown
+    * .victimSet]] is a Spark job. Keyed on the victim store's listing
+    * fingerprint, which every write to its path changes, whichever
+    * handle made it. */
+  @volatile private var victimCache: (Long, Set[String]) = null
   /** Recompute count — observable cache behavior for the spec. */
   @volatile private[serve] var victimRecomputes: Long = 0L
-  private def victimSet(td: graft.store.ParquetStore): Set[String] = {
-    val key = (td.currentRstId, td.generations, td.mutationStamp)
-    val cached = victimCache
-    if (cached != null && cached._1 == key) cached._2
-    else {
-      val v = graft.store.Takedown.victimKeys(td)
-        .collect().map(_.getString(0)).toSet
-      victimRecomputes += 1L
-      victimCache = (key, v)
-      v
-    }
+  private def victims(): Set[String] = takedown match {
+    case None => Set.empty
+    case Some((td, _)) =>
+      val key = td.listingFingerprint()
+      val cached = victimCache
+      if (cached != null && cached._1 == key) cached._2
+      else {
+        val v = graft.store.Takedown.victimSet(td)
+        victimRecomputes += 1L
+        victimCache = (key, v)
+        v
+      }
   }
 
   /** Flask's `<string:…>` converters never match `/`, so one decoded
@@ -306,11 +292,8 @@ final class StoreHttpServer(store: GenerationStore,
           case Some(schema) =>
             // Scrub BEFORE the avro encode — the encoded binary rows
             // can't be anti-joined after.
-            val result = scrubbed(sqlView(dec(sql)))
-            avroJson(graft.sources.AvroCodec.encodeColumns(
-                result, result.columns.toSeq, schema,
-                outCol = "avro_value")
-              .select(col("avro_value")))
+            avroJson(graft.sources.AvroCodec.encodeRows(
+              scrubbed(sqlView(dec(sql))), schema))
           case None => rowsJson(sqlView(dec(sql)))
         }
       case "r" :: Nil   => store.reset(); "null"
@@ -389,23 +372,7 @@ final class StoreHttpServer(store: GenerationStore,
         // run's representative and then vanish, suppressing the run's
         // surviving non-victim captures; scrub-then-collapse serves
         // the correct surviving representative instead.
-        val scrub: Seq[String] => Seq[String] = takedown match {
-          case Some((td, _)) =>
-            val victims = victimSet(td)
-            val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-            (ls: Seq[String]) => ls.filter { l =>
-              val js = l.indexOf('{')
-              js >= 0 && {
-                val node = mapper.readTree(l.substring(js))
-                val url = Option(node.get("url")).map(_.asText()).orNull
-                val refers =
-                  Option(node.get("refers")).map(_.asText()).orNull
-                (url == null || !victims.contains(url)) &&
-                  (refers == null || !victims.contains(refers))
-              }
-            }
-          case None => identity
-        }
+        val banned = victims()
         // CONTINUE-SCAN loop (review r17 session pass): a page whose
         // raw scan filled its limit but whose shaped result is EMPTY
         // would strand the client — empty is its termination signal
@@ -423,7 +390,8 @@ final class StoreHttpServer(store: GenerationStore,
         while (out == null) {
           val raw = scan(after)
           val shaped = graft.sources.Warc.cdxCollapseLines(
-            graft.sources.Warc.cdxFilterLines(scrub(raw), filterSpecs,
+            graft.sources.Warc.cdxFilterLines(
+              graft.sources.Warc.scrubVictims(raw, banned), filterSpecs,
               budgetNanos =
                 math.max(1L, budgetEnd - System.nanoTime())),
             collapseSpec, seedLine = resume)

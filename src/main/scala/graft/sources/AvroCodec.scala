@@ -146,4 +146,10 @@ object AvroCodec {
       }
     }(Encoders.row(outSchema))
   }
+
+  /** A whole result frame as avro datums: every column encoded, one binary
+    * `avro_value` column out — the SQL→Avro select (Q3) of the stores and
+    * of the `/cs` route. */
+  def encodeRows(df: DataFrame, schemaJson: String): DataFrame =
+    encodeColumns(df, df.columns.toSeq, schemaJson).select("avro_value")
 }

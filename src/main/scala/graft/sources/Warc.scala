@@ -1900,13 +1900,23 @@ object Warc {
       lineToCapture(clusterDir, archiveDir, _, fs, depth = 0, victims))
   }
 
-  private def scrubVictims(lines: Seq[String],
-                           victims: Set[String]): Seq[String] =
+  /** The takedown line scrub `/cdx` and `/replay` share: a line serves
+    * only when its `url`, and its `refers` if present, are strings naming
+    * no victim. Fails closed — while any key is banned, a line whose url
+    * or refers cannot be read is withheld. */
+  private[graft] def scrubVictims(lines: Seq[String],
+                                  victims: Set[String]): Seq[String] =
     if (victims.isEmpty) lines
     else lines.filter { l =>
-      val u = cdxField(l, "url")
-      val r = cdxField(l, "refers")
-      !victims.contains(u) && (r.isEmpty || !victims.contains(r))
+      val js = l.indexOf('{')
+      js >= 0 && (try {
+        val node = cdxFieldMapper.readTree(l.substring(js))
+        val url = node.get("url")
+        val refers = node.get("refers")
+        url != null && url.isTextual && !victims.contains(url.asText()) &&
+          (refers == null ||
+            refers.isTextual && !victims.contains(refers.asText()))
+      } catch { case _: Exception => false })
     }
 
   /** Wayback closest-capture selection among one key's lines. */

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The generation-store contract both deployments implement — in-memory
   * [[RecentStore]] and durable [[ParquetStore]] — and everything the query
@@ -42,10 +43,39 @@ trait GenerationStore {
     append(batch.localCheckpoint(eager = true))
 
   /** Q3 SQL→Avro select (shared — both deployments encode identically). */
-  def sqlAvro(query: String, avroSchemaJson: String): DataFrame = {
-    val result = sql(query)
-    graft.sources.AvroCodec.encodeColumns(
-      result, result.columns.toSeq, avroSchemaJson, outCol = "avro_value")
-      .select(col("avro_value"))
+  def sqlAvro(query: String, avroSchemaJson: String): DataFrame =
+    graft.sources.AvroCodec.encodeRows(sql(query), avroSchemaJson)
+}
+
+/** The column rules both deployments share, so the two cannot drift. */
+object GenerationStore {
+
+  /** The stored row shape: `schema` plus `rst_id`, like the reference's
+    * `ALTER TABLE … ADD COLUMN RST_ID INT` (`models.py:579-582`). */
+  def withRstId(schema: StructType): StructType =
+    StructType(schema.fields :+ StructField("rst_id", LongType, nullable = false))
+
+  /** Fit a batch to `target`: select by name in schema order, cast to the
+    * declared types — the typed analog of SQLite's insert-anything-and-
+    * coerce (`models.py:360-363`). A missing column fails before any write. */
+  def align(df: DataFrame, target: StructType): DataFrame = {
+    val cols = target.fields.map { f =>
+      require(df.columns.contains(f.name),
+        s"batch is missing store column '${f.name}' (batch: ${df.columns.mkString(",")})")
+      col(f.name).cast(f.dataType).as(f.name)
+    }
+    df.select(cols.toIndexedSeq: _*)
   }
+
+  /** The key guard of every keyed mutator (`op` names it in the message). */
+  def requireKeyColumns(op: String, schema: StructType, keys: Seq[String]): Unit = {
+    require(keys.nonEmpty, s"$op needs at least one key column")
+    keys.foreach(k => require(schema.fieldNames.contains(k),
+      s"$op key '$k' is not a store column (${schema.fieldNames.mkString(",")})"))
+  }
+
+  /** K4 retention floor (`models.py:702-735`): generations below it expire;
+    * `interval = -1` means the store's `cleanInterval`. */
+  def retentionFloor(counter: Long, interval: Long, cleanInterval: Long): Long =
+    counter - (if (interval == -1L) cleanInterval else interval)
 }

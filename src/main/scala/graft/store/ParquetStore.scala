@@ -1,8 +1,9 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The DURABLE deployment of the serving-store contract — what SCALE.md
   * prescribes for production: one parquet partition directory per
@@ -117,13 +118,7 @@ final class ParquetStore(
     val fenced: Boolean = false
 ) extends GenerationStore {
 
-  val fullSchema: StructType =
-    StructType(schema.fields :+ StructField("rst_id", LongType, nullable = false))
-
-  // Declared BEFORE the constructor statements below: registerView()
-  // bumps it during construction, and a later-declared var would be
-  // re-zeroed when its own initializer finally runs.
-  @volatile private var _mutationStamp: Long = 0L
+  val fullSchema: StructType = GenerationStore.withRstId(schema)
 
   fs.mkdirs(path)
   /** This handle's fencing token ([[WriterFence]]) — claimed BEFORE
@@ -172,7 +167,22 @@ final class ParquetStore(
     * batch its caller saw fail. */
   private def recoverCrashedSwaps(): Unit = {
     promoteOrClearMultiStaging()
-    sweepSingleGenStaging()
+    val swapRe = "^\\.staging_(?:rw|cp|cl)_(\\d+)$".r
+    fs.list(path).foreach { n =>
+      swapRe.findFirstMatchIn(n) match {
+        case Some(m) =>
+          val stray = fs.resolve(path, n)
+          val g = m.group(1).toLong
+          if (fs.exists(fs.resolve(stray, "_SUCCESS"))) promote(stray, g)
+          else if (fs.exists(genDir(g))) fs.deleteRecursively(stray)
+          else
+            System.err.println(s"[graft] $tableName: stray $n has no " +
+              "_SUCCESS marker and no live target — left for the operator")
+        case None =>
+          if (n.matches("^\\.staging_\\d+$"))
+            fs.deleteRecursively(fs.resolve(path, n))
+      }
+    }
   }
 
   /** Promote-or-clear a leftover multi-generation rewrite staging
@@ -205,38 +215,19 @@ final class ParquetStore(
     val committed = fs.exists(fs.resolve(multi, "_GRAFT_COMMIT"))
     val legacy = !committed && fs.exists(fs.resolve(multi, "_SUCCESS"))
     fs.list(multi).filter(_.startsWith("rst_id=")).foreach { n =>
-      val target = fs.resolve(path, n)
-      if (committed || (legacy && !fs.exists(target))) {
-        fs.deleteRecursively(target)
-        fs.rename(fs.resolve(multi, n), target)
-        System.err.println(s"[graft] $tableName: promoted crashed " +
-          s"multi-rewrite $n")
-      }
+      val g = n.stripPrefix("rst_id=").toLong
+      if (committed || (legacy && !fs.exists(genDir(g))))
+        promote(fs.resolve(multi, n), g)
     }
     fs.deleteRecursively(multi)
   }
 
-  private def sweepSingleGenStaging(): Unit = {
-    val swapRe = "^\\.staging_(?:rw|cp|cl)_(\\d+)$".r
-    fs.list(path).foreach { n =>
-      swapRe.findFirstMatchIn(n) match {
-        case Some(m) =>
-          val stray = fs.resolve(path, n)
-          val target = fs.resolve(path, s"rst_id=${m.group(1)}")
-          if (fs.exists(fs.resolve(stray, "_SUCCESS"))) {
-            fs.deleteRecursively(target)
-            fs.rename(stray, target)
-            System.err.println(s"[graft] $tableName: promoted crashed " +
-              s"swap $n -> rst_id=${m.group(1)}")
-          } else if (fs.exists(target)) fs.deleteRecursively(stray)
-          else
-            System.err.println(s"[graft] $tableName: stray $n has no " +
-              "_SUCCESS marker and no live target — left for the operator")
-        case None =>
-          if (n.matches("^\\.staging_\\d+$"))
-            fs.deleteRecursively(fs.resolve(path, n))
-      }
-    }
+  /** Recovery's promote: the staged copy `stray` replaces generation `g`
+    * (a torn, half-deleted target included). */
+  private def promote(stray: String, g: Long): Unit = {
+    fs.deleteRecursively(genDir(g))
+    fs.rename(stray, genDir(g))
+    System.err.println(s"[graft] $tableName: promoted crashed swap $stray -> rst_id=$g")
   }
 
   // ---- WRITER FENCING (r17) ---------------------------------------
@@ -261,25 +252,36 @@ final class ParquetStore(
     try body finally sc.setJobDescription(prev)
   }
 
-  /** Generation directories currently on disk, ascending. Staging dirs
-    * (`.staging_*`, from in-flight or failed writes) never match, so a
-    * crashed half-written generation is invisible to reads AND to counter
-    * restore. */
-  private def generationIds(): Seq[Long] =
+  /** All generation ids currently on disk, ascending — a directory
+    * listing, no data read. Staging dirs (`.staging_*`, from in-flight or
+    * failed writes) never match, so a crashed half-written generation is
+    * invisible to reads AND to counter restore. Readers whose validity
+    * depends on a RANGE of generations (the prefix-index append log's
+    * contiguity guard) check it too. */
+  def generations: Seq[Long] =
     fs.list(path)
       .collect { case n if n.startsWith("rst_id=") => n.stripPrefix("rst_id=").toLong }
       .sorted
 
+  /** Generation `g`'s partition directory. */
+  private def genDir(g: Long): String = fs.resolve(path, s"rst_id=$g")
+
+  /** Delete the generation directories whose ids satisfy `which` —
+    * retention, truncation, reset and the collapse clean-up all expire
+    * data this way. */
+  private def deleteGenerations(which: Long => Boolean): Unit =
+    generations.filter(which).foreach(g => fs.deleteRecursively(genDir(g)))
+
   /** A4 restore from DURABLE storage: the directory listing is the
     * MAX(RST_ID) query (no data read at all). */
-  def maxRstId: Option[Long] = generationIds().lastOption
+  def maxRstId: Option[Long] = generations.lastOption
 
   // ---- APPLIED-FLOOR side channel (r14 verdict #5) ----------------
   // Streamed consumers that replay AS OF a recorded generation stamp
   // ([[graft.streaming.CrawlSchedule.gateAndPace]] → [[policyAsOf]])
   // need that generation to SURVIVE until the batch can no longer
   // replay. The floor lives OUTSIDE the data generations (a dot-dir
-  // Spark scans and [[generationIds]] both ignore), one tiny file per
+  // Spark scans and [[generations]] both ignore), one tiny file per
   // lineage holding the latest stamp in use; [[collapseToLatest]]
   // bounds its fold target to the minimum live floor, so a collapse
   // can never destroy a replay's as-of view. Each new batch of a
@@ -344,12 +346,7 @@ final class ParquetStore(
   /** Whether generation `rstId` is currently on disk — readers that must
     * distinguish "expired by retention" from "legitimately empty" check
     * this before a [[directFetch]] (which returns zero rows for both). */
-  def hasGeneration(rstId: Long): Boolean = generationIds().contains(rstId)
-
-  /** All generation ids currently on disk, ascending — for readers whose
-    * validity depends on a RANGE of generations being present (e.g. the
-    * prefix-index append log's contiguity guard). Directory listing only. */
-  def generations: Seq[Long] = generationIds()
+  def hasGeneration(rstId: Long): Boolean = generations.contains(rstId)
 
   def currentRstId: Long = counter
 
@@ -376,7 +373,7 @@ final class ParquetStore(
     // Re-snapshot AFTER the delta is sealed (keepRecent = 1 keeps the
     // generation this call just wrote intact — see collapseToLatest).
     if (collapseEvery > 0L && collapseKeys.nonEmpty &&
-      generationIds().length > collapseEvery)
+      generations.length > collapseEvery)
       collapseToLatest(collapseKeys, collapseKeepRecent)
     this
   }
@@ -385,15 +382,14 @@ final class ParquetStore(
     * wedge the store on one failed write (errorifexists meets the partial
     * directory on every retry) and serve half-written data after a crash;
     * the staged directory is deleted on failure and never matches
-    * [[generationIds]]. */
+    * [[generations]]. */
   def append(batch: DataFrame): this.type = this.synchronized {
     checkFence()
-    val aligned = schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name))
     val staging = fs.resolve(path, s".staging_$counter")
     try {
-      described("append")(batch.select(aligned.toIndexedSeq: _*)
+      described("append")(GenerationStore.align(batch, schema)
         .write.mode("overwrite").parquet(staging))
-      fs.rename(staging, fs.resolve(path, s"rst_id=$counter"))
+      fs.rename(staging, genDir(counter))
     } catch { case e: Throwable =>
       if (fs.exists(staging)) fs.deleteRecursively(staging)
       throw e
@@ -405,7 +401,8 @@ final class ParquetStore(
     // eventually expire the base — the whole accumulated state. (It
     // was already wrong for delta-keyed stores WITHOUT collapse: any
     // key untouched for cleanInterval appends lost its latest row.)
-    if (collapseEvery <= 0L && counter % cleanFreq == 0) cleanCore(-1L)
+    if (collapseEvery <= 0L && counter % cleanFreq == 0)
+      deleteGenerations(_ < GenerationStore.retentionFloor(counter, -1L, cleanInterval))
     registerView()
     this
   }
@@ -423,11 +420,10 @@ final class ParquetStore(
     * bare filesystem can express. */
   def merge(batch: DataFrame, keys: Seq[String]): this.type = this.synchronized {
     checkFence()
-    requireKeyColumns("merge", keys)
-    val aligned = schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name))
+    GenerationStore.requireKeyColumns("merge", schema, keys)
     // Pinned: read once per touched generation + once for the append —
     // and never re-derived from source files the rewrites may replace.
-    val pinned = batch.select(aligned.toIndexedSeq: _*).localCheckpoint(eager = true)
+    val pinned = GenerationStore.align(batch, schema).localCheckpoint(eager = true)
     val batchKeys = pinned.select(keys.map(col): _*).distinct()
       .localCheckpoint(eager = true)
     rewriteWithoutKeys(batchKeys, keys)
@@ -457,10 +453,8 @@ final class ParquetStore(
   def eraseKeys(victims: DataFrame, keys: Seq[String]): Long =
     this.synchronized {
       checkFence()
-      requireKeyColumns("erase", keys)
-      eraseKeysPinned(victims
-        .select(keys.map(k => col(k).cast(
-          schema(k).dataType).as(k)).toIndexedSeq: _*)
+      GenerationStore.requireKeyColumns("erase", schema, keys)
+      eraseKeysPinned(GenerationStore.align(victims, StructType(keys.map(schema(_))))
         .distinct().localCheckpoint(eager = true), keys)
     }
 
@@ -476,7 +470,7 @@ final class ParquetStore(
                                      keys: Seq[String]): Long =
     this.synchronized {
       checkFence()
-      requireKeyColumns("erase", keys)
+      GenerationStore.requireKeyColumns("erase", schema, keys)
       val n = rewriteWithoutKeys(victimKeys, keys)
       registerView()
       n
@@ -537,7 +531,7 @@ final class ParquetStore(
       fs.publish(fs.resolve(staging, "_GRAFT_COMMIT"),
         touched.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       for (g <- touched) {
-        val original = fs.resolve(path, s"rst_id=$g")
+        val original = genDir(g)
         fs.deleteRecursively(original)
         fs.rename(fs.resolve(staging, s"rst_id=$g"), original)
       }
@@ -558,7 +552,7 @@ final class ParquetStore(
         // reopen, or before the next in-process rewrite).
         try touched.foreach { g =>
           val sub = fs.resolve(staging, s"rst_id=$g")
-          val original = fs.resolve(path, s"rst_id=$g")
+          val original = genDir(g)
           if (fs.exists(sub) && !fs.exists(original)) {
             fs.rename(sub, original)
           }
@@ -572,7 +566,7 @@ final class ParquetStore(
   /** K4 retention as partition-directory deletes — no row-level work. */
   def clean(interval: Long = -1L): this.type = this.synchronized {
     checkFence()
-    cleanCore(interval)
+    deleteGenerations(_ < GenerationStore.retentionFloor(counter, interval, cleanInterval))
     registerView()
     this
   }
@@ -584,9 +578,7 @@ final class ParquetStore(
     * expire a live snapshot's base out from under its append chain. */
   def cleanBelow(keepFrom: Long): this.type = this.synchronized {
     checkFence()
-    generationIds().filter(_ < keepFrom).foreach { g =>
-      fs.deleteRecursively(fs.resolve(path, s"rst_id=$g"))
-    }
+    deleteGenerations(_ < keepFrom)
     registerView()
     this
   }
@@ -598,27 +590,10 @@ final class ParquetStore(
     * id and lockstep ids stay dense. No-op when nothing is above. */
   def truncateAbove(committed: Long): this.type = this.synchronized {
     checkFence()
-    generationIds().filter(_ > committed).foreach { g =>
-      fs.deleteRecursively(fs.resolve(path, s"rst_id=$g"))
-    }
+    deleteGenerations(_ > committed)
     counter = committed + 1L
     registerView()
     this
-  }
-
-  private def cleanCore(interval: Long): Unit = {
-    val keepFrom = counter - (if (interval == -1L) cleanInterval else interval)
-    generationIds().filter(_ < keepFrom).foreach { g =>
-      fs.deleteRecursively(fs.resolve(path, s"rst_id=$g"))
-    }
-  }
-
-  /** The fail-fast key guard of every keyed mutator (`op` names it in
-    * the message). */
-  private def requireKeyColumns(op: String, keys: Seq[String]): Unit = {
-    require(keys.nonEmpty, s"$op needs at least one key column")
-    keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"$op key '$k' is not a store column (${schema.fieldNames.mkString(",")})"))
   }
 
   /** Replace generation `g` with `rows`: stage to `.staging_<tag>_<g>`,
@@ -629,7 +604,7 @@ final class ParquetStore(
   private def swapGeneration(desc: String, tag: String, g: Long,
                              rows: => DataFrame): Unit = {
     val staging = fs.resolve(path, s".staging_${tag}_$g")
-    val original = fs.resolve(path, s"rst_id=$g")
+    val original = genDir(g)
     var originalDeleted = false
     try {
       described(desc)(rows.write.mode("overwrite").parquet(staging))
@@ -651,8 +626,7 @@ final class ParquetStore(
     * generation is absent) — the small-files health signal [[compact]]
     * acts on. */
   def generationFileCount(rstId: Long): Long =
-    fs.list(fs.resolve(path, s"rst_id=$rstId"))
-      .count(_.endsWith(".parquet")).toLong
+    fs.list(genDir(rstId)).count(_.endsWith(".parquet")).toLong
 
   /** OPTIMIZE for one generation: rewrite its files into `numFiles`
     * (default 1) without changing a row or the generation's identity —
@@ -669,7 +643,7 @@ final class ParquetStore(
   def compact(rstId: Long, numFiles: Int = 1): this.type = this.synchronized {
     checkFence()
     require(numFiles >= 1, "numFiles must be positive")
-    if (generationIds().contains(rstId)) {
+    if (generations.contains(rstId)) {
       swapGeneration("compact", "cp", rstId,
         raw(Some(col("rst_id") === rstId)).drop("rst_id").repartition(numFiles))
       registerView()
@@ -725,8 +699,8 @@ final class ParquetStore(
   def collapseToLatest(keys: Seq[String], keepRecent: Int = 1): this.type =
     this.synchronized {
       checkFence()
-      requireKeyColumns("collapse", keys)
-      val gens = generationIds()
+      GenerationStore.requireKeyColumns("collapse", schema, keys)
+      val gens = generations
       // The fold target never passes a LIVE as-of stamp (r14 verdict
       // #5): policyAsOf(rst) stays exact as long as some generation
       // ≤ rst survives and the fold target T ≤ rst — bounding the
@@ -738,19 +712,11 @@ final class ParquetStore(
           .takeWhile(_ <= floor)
       if (toCollapse.length >= 2) {
         val target = toCollapse.last
-        import org.apache.spark.sql.expressions.Window
-        val base = raw(Some(col("rst_id") <= target))
-          .withColumn("_rk", row_number().over(
-            Window.partitionBy(keys.map(col): _*)
-              .orderBy(col("rst_id").desc)))
-          .filter(col("_rk") === 1)
-          .drop("_rk", "rst_id")
-        swapGeneration("collapse", "cl", target, base)
+        swapGeneration("collapse", "cl", target,
+          latestRows(raw(Some(col("rst_id") <= target)), keys).drop("rst_id"))
         // Older generations are now subsumed — delete is pure cleanup
         // and crash-resumable.
-        toCollapse.init.foreach { g =>
-          fs.deleteRecursively(fs.resolve(path, s"rst_id=$g"))
-        }
+        deleteGenerations(_ < target)
         registerView()
       }
       this
@@ -772,22 +738,26 @@ final class ParquetStore(
     * format's snapshot isolation is the documented upgrade. */
   def asOfLatestPerKey(keys: Seq[String], rst: Long): DataFrame = {
     require(keys.nonEmpty, "asOf needs at least one key column")
-    import org.apache.spark.sql.expressions.Window
-    raw(Some(col("rst_id") <= rst))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy(keys.map(col): _*)
-          .orderBy(col("rst_id").desc)))
-      .filter(col("_rk") === 1)
-      .drop("_rk")
+    latestRows(raw(Some(col("rst_id") <= rst)), keys)
   }
 
   /** Latest row per key over the whole store — [[asOfLatestPerKey]] at
-    * the newest generation. The ONE latest-per-key window every
-    * delta-keyed consumer reads through (the crawl scheduler's host
-    * state, the robots policy table, the recrawl stats) — a tie-break
-    * or pruning fix lands here once, not per caller. */
+    * the newest generation: what every delta-keyed consumer reads
+    * (the crawl scheduler's host state, the robots policy table, the
+    * recrawl stats). */
   def latestPerKey(keys: Seq[String]): DataFrame =
     asOfLatestPerKey(keys, Long.MaxValue)
+
+  /** The ONE latest-row-per-key window: per `keys`, the row with the
+    * highest `rst_id`. [[asOfLatestPerKey]], [[latestPerKeySemi]] and
+    * [[collapseToLatest]] all rank through it, so a tie-break or
+    * pruning fix lands here once, not per caller. */
+  private def latestRows(rows: DataFrame, keys: Seq[String]): DataFrame =
+    rows
+      .withColumn("_rk", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col("rst_id").desc)))
+      .filter(col("_rk") === 1)
+      .drop("_rk")
 
   /** [[latestPerKey]] restricted to the rows matching `probe` on `on`
     * — a PREFIX of `keys`, so the semi-join drops whole window
@@ -806,14 +776,10 @@ final class ParquetStore(
                        rst: Long = Long.MaxValue): DataFrame = {
     require(on.nonEmpty && keys.startsWith(on),
       s"latestPerKeySemi: [$on] must be a prefix of the window keys [$keys]")
-    import org.apache.spark.sql.expressions.Window
-    raw(if (rst == Long.MaxValue) None else Some(col("rst_id") <= rst))
-      .join(probe.select(on.map(col): _*).distinct(), on, "left_semi")
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy(keys.map(col): _*)
-          .orderBy(col("rst_id").desc)))
-      .filter(col("_rk") === 1)
-      .drop("_rk")
+    latestRows(
+      raw(if (rst == Long.MaxValue) None else Some(col("rst_id") <= rst))
+        .join(probe.select(on.map(col): _*).distinct(), on, "left_semi"),
+      keys)
   }
 
   /** Whether a replay-guarded consumer already applied
@@ -860,9 +826,12 @@ final class ParquetStore(
     * lockstep coordinators all stay read-fresh, which a
     * mutation-counter key could not guarantee). The fingerprint costs
     * a handful of directory syscalls — noise next to the relation
-    * construction it avoids. Thread-safe via volatile publish. */
-  @volatile private var cachedRaw: (Long, DataFrame) = null
-  private def listingFingerprint(): Long = {
+    * construction it avoids. Thread-safe via volatile publish. The
+    * fingerprint is the store's one change signal: the HTTP victim-set
+    * cache keys on it too. `= _`, not `= null`: an explicit initializer
+    * runs after the constructor's `registerView()` and drops its entry. */
+  @volatile private var cachedRaw: (Long, DataFrame) = _
+  private[graft] def listingFingerprint(): Long = {
     var h = 1125899906842597L
     def mix(s: String): Unit = {
       var i = 0
@@ -880,7 +849,7 @@ final class ParquetStore(
     val c = cachedRaw
     if (c != null && c._1 == fp) return c._2
     val df =
-      if (generationIds().isEmpty)
+      if (generations.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fullSchema)
       else
@@ -911,25 +880,13 @@ final class ParquetStore(
     * durable analog of reconnect-on-:memory:. */
   def reset(): this.type = this.synchronized {
     checkFence()
-    generationIds().foreach(g =>
-      fs.deleteRecursively(fs.resolve(path, s"rst_id=$g")))
+    deleteGenerations(_ => true)
     if (fs.isDirectory(floorsDir)) fs.deleteRecursively(floorsDir)
     counter = 1L
     registerView()
     this
   }
 
-  private def registerView(): Unit = {
-    _mutationStamp += 1L
+  private def registerView(): Unit =
     selectAll.createOrReplaceTempView(tableName)
-  }
-
-  /** Monotone same-JVM mutation stamp (review r17): bumped by every
-    * mutator that re-registers the view — INCLUDING in-place rewrites
-    * (eraseKeys / compact / collapse) that change neither the counter
-    * nor the generation listing, which a listing-keyed cache would
-    * miss. Caches in this JVM (the HTTP victim-set cache) key on it;
-    * cross-process writers are outside its scope — the store is
-    * single-writer by contract. */
-  def mutationStamp: Long = _mutationStamp
 }

@@ -2,7 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The serving store — the reference's `RecentSqlite3table`
   * (`audit_utils/audit_utils/models.py:507-735`) re-expressed as a rolling
@@ -31,9 +31,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 final class RecentStore(
     val spark: SparkSession,
     /** Store schema WITHOUT rst_id — the `sqlite_schema` analog
-      * (`README.md:98-108`); rst_id (LongType) is appended automatically like
-      * the reference's `ALTER TABLE … ADD COLUMN RST_ID INT`
-      * (`models.py:579-582`). */
+      * (`README.md:98-108`); rst_id is appended automatically
+      * ([[GenerationStore.withRstId]]). */
     val schema: StructType,
     val tableName: String = "default",
     val cleanInterval: Long = 100,
@@ -47,8 +46,7 @@ final class RecentStore(
     val softLimit: Option[Long] = None
 ) extends GenerationStore {
 
-  val fullSchema: StructType =
-    StructType(schema.fields :+ StructField("rst_id", LongType, nullable = false))
+  val fullSchema: StructType = GenerationStore.withRstId(schema)
 
   // Mutators are synchronized (a streaming append racing an HTTP /r reset
   // would interleave the read-modify-write and resurrect wiped data);
@@ -68,11 +66,7 @@ final class RecentStore(
   /** `SELECT MAX(rst_id)` — operator A4 (`models.py:667-700`). None when
     * the store is empty, like the reference's NULL. */
   def maxRstId: Option[Long] =
-    data.agg(max(col("rst_id"))).head().getAs[Any](0) match {
-      case null      => None
-      case l: Long   => Some(l)
-      case other     => Some(other.toString.toLong)
-    }
+    Option(data.agg(max(col("rst_id"))).head().getAs[java.lang.Long](0)).map(_.longValue)
 
   /** Generic MAX over any column (the reference allows `column='num'`). */
   def selectMax(column: String): DataFrame =
@@ -81,7 +75,7 @@ final class RecentStore(
   /** Restore the generation counter from existing contents — reattach
     * semantics (`models.py:533-536`): counter = MAX(rst_id)+1, or 1 if empty. */
   def restoreFrom(existing: DataFrame): this.type = this.synchronized {
-    data = align(existing, withRstId = true)
+    data = GenerationStore.align(existing, fullSchema)
     counter = maxRstId.map(_ + 1L).getOrElse(1L)
     registerView()
     this
@@ -94,7 +88,7 @@ final class RecentStore(
     */
   def append(batch: DataFrame): this.type = this.synchronized {
     checkSoftLimit(batch)
-    val stamped = align(batch, withRstId = false)
+    val stamped = GenerationStore.align(batch, schema)
       .withColumn("rst_id", lit(counter))
     data = data.unionByName(stamped)
     commitGeneration()
@@ -136,11 +130,9 @@ final class RecentStore(
     * `semi` join away and deliberately not computed here — it would cost an
     * extra action per merge on the hot path. */
   def merge(batch: DataFrame, keys: Seq[String]): this.type = this.synchronized {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"merge key '$k' is not a store column (${schema.fieldNames.mkString(",")})"))
+    GenerationStore.requireKeyColumns("merge", schema, keys)
     checkSoftLimit(batch)
-    val aligned = align(batch, withRstId = false)
+    val aligned = GenerationStore.align(batch, schema)
     data = data
       .join(aligned.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(aligned.withColumn("rst_id", lit(counter)))
@@ -152,8 +144,8 @@ final class RecentStore(
     * older than `counter - interval`. `clean(0)` empties the store (doctest
     * `models.py:718-727`). */
   def clean(interval: Long = -1L): this.type = this.synchronized {
-    val keepFrom = counter - (if (interval == -1L) cleanInterval else interval)
-    data = data.filter(col("rst_id") >= lit(keepFrom))
+    data = data.filter(col("rst_id") >=
+      lit(GenerationStore.retentionFloor(counter, interval, cleanInterval)))
     registerView()
     this
   }
@@ -200,17 +192,4 @@ final class RecentStore(
 
   private def registerView(): Unit =
     data.createOrReplaceTempView(tableName)
-
-  /** Align an incoming batch to the store schema: select columns by name in
-    * schema order and cast to the declared types — the typed analog of
-    * SQLite's insert-anything-and-coerce (`models.py:360-363`). */
-  private def align(df: DataFrame, withRstId: Boolean): DataFrame = {
-    val target = if (withRstId) fullSchema else StructType(schema.fields)
-    val cols = target.fields.map { f =>
-      require(df.columns.contains(f.name),
-        s"batch is missing store column '${f.name}' (batch: ${df.columns.mkString(",")})")
-      col(f.name).cast(f.dataType).as(f.name)
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
 }

@@ -105,6 +105,12 @@ object Takedown {
   def victimKeys(store: ParquetStore): DataFrame =
     store.selectAll.select(col("key")).distinct()
 
+  /** [[victimKeys]] collected to the driver — the one place the banned-key
+    * set leaves Spark, for line-level scrubs (CDX lines, archive records)
+    * that run outside a DataFrame. One Spark job; list-sized by nature. */
+  def victimSet(store: ParquetStore): Set[String] =
+    victimKeys(store).collect().map(_.getString(0)).toSet
+
   /** LOGICAL takedown on any frame: drop rows whose `keyCol` matches a
     * recorded victim. Apply on the READ path (serving a scrubbed view
     * while physical erasure is still pending — the HTTP veneer applies
@@ -192,7 +198,7 @@ object Takedown {
                    zipnumDir: String = null,
                    fs: graft.FsIO = graft.FsIO.local): Long = {
     import graft.sources.Warc
-    val victims = victimKeys(store).collect().map(_.getString(0)).toSet
+    val victims = victimSet(store)
     // RECOVER crashed swaps FIRST, before anything lists or sweeps
     // (advice r16): a non-atomic overwrite-rename that died between
     // deleting an archive and renaming its staged rewrite in leaves
@@ -282,8 +288,7 @@ object Takedown {
     * response under a new owner. Same touched-generation copy-on-write
     * as [[erase]]; returns generations rewritten. */
   def eraseReps(repStore: ParquetStore, store: ParquetStore): Long =
-    repStore.eraseKeys(victimKeys(store).withColumnRenamed("key", "url"),
-      Seq("url"))
+    erase(repStore, store, "url")
 
   /** COMPLIANCE ATTESTATION (r16): how many exported records still name
     * each victim — directly (`url`) or by revisit implication
@@ -304,7 +309,7 @@ object Takedown {
                        exportDir: String, store: ParquetStore,
                        fs: graft.FsIO = graft.FsIO.local): DataFrame = {
     import spark.implicits._
-    val victims = victimKeys(store).collect().map(_.getString(0)).toSet
+    val victims = victimSet(store)
     val names = fs.list(exportDir).filter(n =>
       (n.endsWith(".warc.gz") || n.endsWith(".warc")) && !n.startsWith("."))
     val missing = names.filterNot { n =>

@@ -55,6 +55,20 @@ class GraftConfigSpec extends AnyFunSuite {
     MsgSettings(bucketInterval = 20) // divides 86400 — fine
   }
 
+  test("msg_map_schema targets must be distinct and not clash with pipeline columns") {
+    def msg(map: String) = GraftConfig.fromIni(
+      s"[MsgSettings]\nmsg_map_schema = $map\n").msg
+    // A message with its own `count` field is a plausible input; mapped
+    // to `count` it would meet the counter's column in the first batch.
+    Seq("count", "bucket_start", "bucket_end", "rst_id").foreach { t =>
+      intercept[IllegalArgumentException](msg(s"""{"$t": "n"}"""))
+    }
+    intercept[IllegalArgumentException](msg("""{"Count": "n"}"""))
+    intercept[IllegalArgumentException](
+      MsgSettings(msgMapSchema = Seq("a" -> "x", "A" -> "y")))
+    assert(msg("""{"n_count": "count"}""").msgMapSchema === Seq("n_count" -> "count"))
+  }
+
   test("clean_freq must be positive and clean_interval non-negative") {
     def store(kv: String) = GraftConfig.fromIni(s"[HTTPEndpointSetting]\n$kv\n").store
     intercept[IllegalArgumentException](store("clean_freq = 0"))

@@ -417,6 +417,117 @@ class StoreHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("victim cache follows the takedown store's files: a withdrawal erased through another handle unmasks the URL") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    import org.apache.spark.sql.types._
+    import graft.store.{ParquetStore, Takedown}
+    import graft.sources.Warc
+    val base = java.nio.file.Files.createTempDirectory("graft_http_vc")
+    val rows = Seq(
+      ("g0", "https://v.org/a", "2024-01-01T00:00:00Z", "a"),
+      ("g0", "https://v.org/b", "2024-01-01T00:00:00Z", "b"))
+      .map { case (g, u, d, b) =>
+        (g, u, d, "text/plain", b.getBytes("UTF-8"))
+      }.toDF("file_group", "url", "warc_date", "content_type", "body")
+    val znDir = s"$base/zn"
+    Warc.writeZipnum(
+      Warc.encodeResponses(rows, withCdx = true).localCheckpoint(true),
+      znDir, shards = 1, blockLines = 2)
+    val store = new ParquetStore(spark, StructType(Seq(
+      StructField("doc_key", StringType))), s"$base/docs",
+      tableName = "http_vc_docs")
+    val td = Takedown.takedownStore(spark, s"$base/td",
+      tableName = "http_vc_list")
+    val srv = new StoreHttpServer(store,
+      takedown = Some((td, "doc_key")),
+      cdxCluster = Some(znDir)).start()
+    try {
+      Takedown.request(td, Seq(("https://v.org/a", "dmca"),
+        ("https://v.org/b", "dmca")).toDF("key", "reason"))
+      assert(get(srv.port, s"/cdx/${enc("https://v.org/a")}")._2 === "[]")
+      assert(get(srv.port, s"/cdx/${enc("https://v.org/b")}")._2 === "[]")
+      // The notice for /a is withdrawn and erased through ANOTHER handle
+      // on the same path: the served handle's counter and generation
+      // ids do not move (the erase rewrites generation 1 in place), but
+      // its files do.
+      val other = Takedown.takedownStore(spark, s"$base/td",
+        tableName = "http_vc_list_2")
+      assert(other.eraseKeys(Seq("https://v.org/a").toDF("key"),
+        Seq("key")) === 1L)
+      val (_, a) = get(srv.port, s"/cdx/${enc("https://v.org/a")}")
+      assert(a.contains("https://v.org/a"),
+        s"a withdrawn takedown must stop masking the URL, got $a")
+      assert(get(srv.port, s"/cdx/${enc("https://v.org/b")}")._2 === "[]")
+    } finally srv.stop()
+  }
+
+  test("takedown fails closed on unreadable CDX lines: /cdx and /replay withhold them, no request fails") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    import graft.store.{ParquetStore, Takedown}
+    import graft.sources.Warc
+    val base = java.nio.file.Files.createTempDirectory("graft_http_corrupt")
+    val rows = Seq(
+      ("g0", "https://h.org/ok", "2024-01-01T00:00:00Z", "OK"),
+      ("g0", "https://h.org/broken", "2024-01-01T00:00:00Z", "BROKEN"),
+      ("g0", "https://h.org/nullurl", "2024-01-01T00:00:00Z", "NULLURL"),
+      ("g0", "https://h.org/bad", "2024-01-01T00:00:00Z", "banned"))
+      .map { case (g, u, d, b) =>
+        (g, u, d, "text/plain", b.getBytes("UTF-8"))
+      }.toDF("file_group", "url", "warc_date", "content_type", "body")
+    val files = Warc.encodeResponses(rows, withCdx = true)
+      .localCheckpoint(true)
+    val arch = s"$base/arch"
+    Warc.writeFiles(files, arch)
+    // Hand-corrupt two cluster lines (the archives stay intact): one
+    // with truncated JSON, one whose url is JSON null.
+    def corrupt(line: String): String =
+      if (line.startsWith("https://h.org/broken "))
+        line.substring(0, line.indexOf(",\"mime\""))
+      else line.replace("\"url\":\"https://h.org/nullurl\"", "\"url\":null")
+    val cdx = files.filter(col("path").endsWith(".cdx")).collect().map { r =>
+      (r.getAs[String]("path"),
+        new String(r.getAs[Array[Byte]]("content"), UTF_8).split("\n")
+          .map(corrupt).mkString("", "\n", "\n").getBytes(UTF_8))
+    }.toSeq
+    val znDir = s"$base/zn"
+    Warc.writeZipnum(cdx.toDF("path", "content"), znDir, shards = 1,
+      blockLines = 2)
+    val store = new ParquetStore(spark, StructType(Seq(
+      StructField("doc_key", StringType))), s"$base/docs",
+      tableName = "http_corrupt_docs")
+    val td = Takedown.takedownStore(spark, s"$base/td",
+      tableName = "http_corrupt_list")
+    val srv = new StoreHttpServer(store,
+      takedown = Some((td, "doc_key")),
+      cdxCluster = Some(znDir), cdxArchives = Some(arch)).start()
+    try {
+      // No key banned yet: the scrub is off and lines serve as stored.
+      val (s0, broken0) = get(srv.port, s"/cdx/${enc("https://h.org/broken")}")
+      assert(s0 === 200 && broken0.contains("https://h.org/broken"))
+      val (r0, body0) = get(srv.port, s"/replay/*/${enc("https://h.org/nullurl")}")
+      assert(r0 === 200 && body0 === "NULLURL")
+      Takedown.request(td,
+        Seq(("https://h.org/bad", "dmca")).toDF("key", "reason"))
+      // Under takedown an unreadable url cannot be shown innocent: both
+      // routes withhold the line, and neither request fails.
+      for (u <- Seq("https://h.org/broken", "https://h.org/nullurl")) {
+        assert(get(srv.port, s"/cdx/${enc(u)}") === (200, "[]"), u)
+        assert(get(srv.port, s"/replay/*/${enc(u)}")._1 === 404, u)
+      }
+      val (sp, page) = get(srv.port,
+        s"/cdx/${enc("https://h.org/")}?matchType=prefix")
+      assert(sp === 200)
+      assert(page.contains("https://h.org/ok") && !page.contains("broken") &&
+        !page.contains("nullurl") && !page.contains("https://h.org/bad"))
+      assert(get(srv.port, s"/replay/*/${enc("https://h.org/ok")}") === (200, "OK"))
+      assert(get(srv.port, s"/replay/*/${enc("https://h.org/bad")}")._1 === 404)
+    } finally srv.stop()
+  }
+
   test("/cdx matchType=prefix: key-ordered bounded pages with resume; scrub composes") {
     val sparkSession = spark
     import sparkSession.implicits._

@@ -211,6 +211,34 @@ class ParquetStoreSpec extends SparkSpec {
     assert(s.selectAll.count() === 3L)
   }
 
+  test("latestPerKeySemi equals latestPerKey (or asOfLatestPerKey) semi-joined to the probe") {
+    val s = new ParquetStore(spark, schema, tmp(), tableName = "semi_dur")
+    s.append(batch("a" -> 1L, "b" -> 10L)) // gen 1
+    s.append(batch("a" -> 2L, "c" -> 30L)) // gen 2
+    s.append(batch("b" -> 11L, "a" -> 2L)) // gen 3: (a, 2) again
+    val probe = batch("a" -> 0L, "z" -> 0L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "n", "rst_id").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    def semi(df: org.apache.spark.sql.DataFrame) =
+      rows(df.join(probe.select("k").distinct(), Seq("k"), "left_semi"))
+    // One key, and a two-column window probed on its prefix.
+    for (keys <- Seq(Seq("k"), Seq("k", "n"))) {
+      assert(rows(s.latestPerKeySemi(keys, probe, Seq("k"))) ===
+        semi(s.latestPerKey(keys)), keys)
+      assert(rows(s.latestPerKeySemi(keys, probe, Seq("k"), rst = 2L)) ===
+        semi(s.asOfLatestPerKey(keys, 2L)), keys)
+    }
+    assert(rows(s.latestPerKeySemi(Seq("k"), probe, Seq("k"))) ===
+      Set(("a", 2L, 3L)))
+    assert(rows(s.latestPerKeySemi(Seq("k", "n"), probe, Seq("k"))) ===
+      Set(("a", 1L, 1L), ("a", 2L, 3L)))
+    assert(rows(s.latestPerKeySemi(Seq("k"), probe, Seq("k"), rst = 1L)) ===
+      Set(("a", 1L, 1L)))
+    intercept[IllegalArgumentException](
+      s.latestPerKeySemi(Seq("k", "n"), probe, Seq("n")))
+  }
+
   test("applied floor: collapse never folds past a live stamp; release/advance frees the history") {
     val s = new ParquetStore(spark, schema, tmp(), tableName = "floor_dur")
     s.append(batch("a" -> 1L)) // gen 1
