@@ -5,7 +5,7 @@ package graft
   * Spark's own readers/writers — [[graft.sources.Warc.writeFiles]],
   * [[graft.sources.Warc.writeZipnum]]/[[graft.sources.Warc.zipnumLookup]],
   * [[graft.store.Takedown.eraseExports]], and [[graft.store.ParquetStore]]'s
-  * generation/floor swaps — goes through this trait instead of
+  * snapshot log, floors and file deletes — goes through this trait instead of
   * `java.nio.file` directly, so the compliance machinery (erasure,
   * applied floors, byte-stable re-export) runs on whatever filesystem
   * the 100 TB deployment actually writes to:
@@ -21,15 +21,15 @@ package graft
   *     atomic) and delegates `file:`/bare paths to nio `ATOMIC_MOVE`
   *     (advice r16: Hadoop's local connector implements overwrite-
   *     rename as delete-then-rename — two ops, a crash between them
-  *     loses the target). **S3 is documented honestly, not papered over**:
-  *     S3A `rename` is copy-then-delete (neither atomic nor cheap), so
-  *     the stage→swap idioms here are correct only on
-  *     rename-consistent stores (HDFS, POSIX, most HCFS). An S3
-  *     deployment needs a manifest-commit layer (a table format, or an
-  *     S3-committer-style single-PUT protocol) above this seam —
-  *     that's a protocol change, not a facade method, and claiming
-  *     atomicity the store cannot provide would be worse than scoping
-  *     the contract. See SCALE.md "Durability on HDFS/S3".
+  *     loses the target).
+  *
+  * A [[VersionedDir]] commit (temp file + no-replace [[rename]]) is an
+  * atomic, exclusive create on POSIX and HDFS: one writer lands each
+  * version, readers see whole versions. On S3A/GCS the rename is
+  * copy-then-delete — a version still appears whole, but two writers
+  * racing for one number can both "win", so there it serves the single
+  * writer the stores require (fencing refuses a stale one at its next
+  * check), not concurrent writers. See SCALE.md "Durability on HDFS/S3".
   *
   * Implementations must be SERIALIZABLE — [[graft.sources.Warc
   * .writeFiles]] and [[graft.store.Takedown.eraseExports]] run
@@ -78,11 +78,61 @@ trait FsIO extends Serializable {
     write(tmp, bytes)
     atomicSwap(tmp, path)
   }
-  /** Rename without replace — `target` must not exist (generation
-    * directory seals). */
+  /** Rename without replace — `target` must not exist (a
+    * [[VersionedDir]] commit, zipnum shard landing). */
   def rename(src: String, target: String): Unit
   def delete(path: String): Boolean
   def deleteRecursively(path: String): Unit
+  def versioned(dir: String, prefix: String = ""): VersionedDir =
+    new VersionedDir(this, dir, prefix)
+}
+
+/** Immutable numbered files `<prefix><N>` in one directory — the commit
+  * idiom of [[graft.store.ParquetStore]]'s snapshot log,
+  * [[graft.store.PrefixIndexStore]]'s `_commits` and
+  * [[graft.store.WriterFence]]'s epochs. Version N exists once its file
+  * does; the latest is the highest number, so no pointer can tear. */
+final class VersionedDir(fs: FsIO, val dir: String, prefix: String) {
+  private val Version = (java.util.regex.Pattern.quote(prefix) + "(\\d{1,18})").r
+
+  /** Every committed version, ascending. */
+  def versions(): Seq[Long] =
+    fs.list(dir).collect { case Version(n) => n.toLong }.sorted
+
+  def latest(): Option[Long] = versions().lastOption
+
+  def file(version: Long): String = fs.resolve(dir, prefix + version)
+
+  /** Land `bytes` as `version`: write a temp file, then a no-replace
+    * [[FsIO.rename]] onto the version's name. False when another writer
+    * got there first — the name already exists, or a rival's [[sweep]]
+    * removed the temp before the rename — any other failure throws. */
+  def commit(version: Long, bytes: Array[Byte]): Boolean = {
+    val tmp = fs.resolve(dir, s".tmp_${java.util.UUID.randomUUID()}")
+    fs.write(tmp, bytes)
+    try { fs.rename(tmp, file(version)); true }
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException |
+           _: org.apache.hadoop.fs.FileAlreadyExistsException |
+           _: java.nio.file.NoSuchFileException |
+           _: java.io.FileNotFoundException =>
+        fs.delete(tmp)
+        false
+    }
+  }
+
+  /** Delete every temp file (a crashed or rival commit's) and every
+    * version but the newest `keep`. */
+  def sweep(keep: Int = Int.MaxValue): Unit = {
+    val vs = versions()
+    val floor = if (vs.length > keep) vs(vs.length - keep) else Long.MinValue
+    fs.list(dir).foreach {
+      case Version(v) if v.toLong >= floor => ()
+      case n if n.startsWith(".") || Version.matches(n) =>
+        fs.delete(fs.resolve(dir, n))
+      case _ => ()
+    }
+  }
 }
 
 /** Local-filesystem backend: `java.nio.file` with true `ATOMIC_MOVE` —

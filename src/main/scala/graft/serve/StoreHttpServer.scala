@@ -87,7 +87,7 @@ final class StoreHttpServer(store: GenerationStore,
     * alias (`SELECT doc_key AS k …`) or an expression over the key
     * would smuggle a banned row past it (review r15). Re-registered
     * per request because the scrub plan freezes the victim store's
-    * generation listing at construction, and because the store's own
+    * snapshot at construction, and because the store's own
     * appends re-register the raw view. Tables OTHER than this store's
     * (attached catalogs) are not ours to scrub — results still pass
     * through the name-based [[scrubbed]] net in [[rowsJson]]. */
@@ -251,16 +251,16 @@ final class StoreHttpServer(store: GenerationStore,
 
   /** The banned-key set `/cdx` and `/replay` scrub lines against (empty
     * without a takedown pair), cached because [[graft.store.Takedown
-    * .victimSet]] is a Spark job. Keyed on the victim store's listing
-    * fingerprint, which every write to its path changes, whichever
-    * handle made it. */
+    * .victimSet]] is a Spark job. Keyed on the victim store's snapshot
+    * version, which every commit to its path moves, whichever handle
+    * made it. */
   @volatile private var victimCache: (Long, Set[String]) = null
   /** Recompute count — observable cache behavior for the spec. */
   @volatile private[serve] var victimRecomputes: Long = 0L
   private def victims(): Set[String] = takedown match {
     case None => Set.empty
     case Some((td, _)) =>
-      val key = td.listingFingerprint()
+      val key = td.snapshotVersion()
       val cached = victimCache
       if (cached != null && cached._1 == key) cached._2
       else {

@@ -16,14 +16,14 @@ import org.apache.spark.sql.types._
   * Realized as three [[ParquetStore]]s advancing generations in lockstep
   * (the K7 durable-generations machinery): one snapshot = one `rst_id`
   * across all three, so reads partition-prune to exactly the generation
-  * they score against and a restart recovers from the directory listing
-  * alone.
+  * they score against and a restart recovers from the stores' snapshot
+  * logs and the commit manifests alone.
   *
   * DURABILITY CONTRACT (r10 — the manifest closed the r9 crash window):
   * a generation EXISTS only once its commit manifest file
   * (`<path>/_commits/<g>`, written LAST, via temp + atomic rename) does.
-  * A crash inside one store's append leaves only an invisible staging
-  * dir; a crash BETWEEN the three appends leaves orphaned un-manifested
+  * A crash inside one store's append leaves only files no snapshot
+  * names; a crash BETWEEN the three appends leaves orphaned un-manifested
   * generations in a prefix of the stores — reads keep serving the last
   * COMMITTED generation, and the next [[snapshot]]/[[appendDocs]] call
   * GC's the orphans and realigns the three counters before writing
@@ -150,24 +150,18 @@ final class PrefixIndexStore(
 
   // ---- Commit manifest: the atomic multi-store commit point -------------
 
-  private val commitsDir = fs.resolve(path, "_commits")
-  fs.mkdirs(commitsDir)
+  private val commits = fs.versioned(fs.resolve(path, "_commits"))
+  fs.mkdirs(commits.dir)
   migrateLegacy()
 
-  /** Generation ids with a commit manifest, ascending. */
-  private def committedIds(): Seq[Long] =
-    fs.list(commitsDir)
-      .collect { case n if n.forall(_.isDigit) => n.toLong }.sorted
-
-  /** Write `<path>/_commits/<g>` (content: the generation's base id, for
-    * operators) via temp + atomic rename — the LAST step of a snapshot or
-    * delta append; its existence IS the commit. */
-  private def commit(g: Long, base: Long): Unit = {
-    val tmp = fs.resolve(commitsDir, s".tmp_$g")
-    fs.write(tmp, s"$base\n".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    fs.rename(tmp, fs.resolve(commitsDir, s"$g"))
-  }
+  /** Commit `<path>/_commits/<g>` (content: the generation's base id,
+    * for operators) — the LAST step of a snapshot or delta append; its
+    * existence IS the commit. */
+  private def commit(g: Long, base: Long): Unit =
+    if (!commits.commit(g, s"$base\n".getBytes(
+      java.nio.charset.StandardCharsets.UTF_8)))
+      throw new IllegalStateException(s"prefix-index generation $g at " +
+        s"$path was committed by another writer — this index is single-writer")
 
   /** Pre-manifest directories (r9 layout) carry committed generations with
     * no manifest. Adopt them once: every generation present in ALL THREE
@@ -176,7 +170,7 @@ final class PrefixIndexStore(
     * the next write's [[recover]] GC's them — the r9 "fails loud, rebuild
     * by hand" case heals automatically instead. */
   private def migrateLegacy(): Unit =
-    if (committedIds().isEmpty) {
+    if (commits.latest().isEmpty) {
       val complete = Seq(hashedStore, dfsStore, prefixStore)
         .map(_.generations.toSet).reduce(_ intersect _)
       complete.toSeq.sorted.foreach { g => commit(g, baseOf(g)) }
@@ -185,18 +179,16 @@ final class PrefixIndexStore(
   /** GC orphaned generations from a crash between appends and realign the
     * three counters to the last committed generation — called before
     * every write so a crashed store never needs manual repair. Also
-    * sweeps `.tmp_*` manifest staging files (a crash between
-    * [[commit]]'s write and its atomic rename strands one; nothing else
-    * ever deletes them — `committedIds` filters them out, so without the
-    * sweep they'd accumulate for the life of the store). */
+    * sweeps manifest temp files (a crash between [[commit]]'s write and
+    * its rename strands one; `commits.versions()` never parses them, so
+    * without the sweep they'd accumulate for the life of the store). */
   private def recover(): Unit = {
     val committed = latestSnapshot.getOrElse(0L)
     Seq(hashedStore, dfsStore, prefixStore).foreach { s =>
       if (s.maxRstId.exists(_ > committed) || s.currentRstId != committed + 1L)
         s.truncateAbove(committed)
     }
-    fs.list(commitsDir).filter(_.startsWith(".tmp_"))
-      .foreach(n => fs.delete(fs.resolve(commitsDir, n)))
+    commits.sweep()
   }
 
   /** Build the index from `corpus` and persist it as the next generation
@@ -266,7 +258,7 @@ final class PrefixIndexStore(
   /** Latest COMMITTED generation id (full snapshot OR delta) — the
     * manifest is the commit point, so an orphaned post-crash generation
     * sitting in a prefix of the stores is never served. */
-  def latestSnapshot: Option[Long] = committedIds().lastOption
+  def latestSnapshot: Option[Long] = commits.latest()
 
   /** A committed generation's base, read from its MANIFEST content — a
     * filesystem read, no Spark job, so snapshot-keyed retention over a
@@ -276,7 +268,7 @@ final class PrefixIndexStore(
     * base field or was hand-edited. */
   private def baseFromManifest(g: Long): Long = {
     try {
-      val t = new String(fs.read(fs.resolve(commitsDir, s"$g")),
+      val t = new String(fs.read(commits.file(g)),
         java.nio.charset.StandardCharsets.UTF_8).trim
       if (t.nonEmpty && t.forall(_.isDigit)) t.toLong else baseOf(g)
     } catch { case scala.util.control.NonFatal(_) => baseOf(g) }
@@ -285,7 +277,7 @@ final class PrefixIndexStore(
   /** Committed FULL snapshots (self-base generations), ascending — the
     * unit [[keepSnapshots]] retention counts. Manifest-content reads
     * only (see [[baseFromManifest]]). */
-  def fullSnapshots: Seq[Long] = committedIds().filter(g => baseFromManifest(g) == g)
+  def fullSnapshots: Seq[Long] = commits.versions().filter(g => baseFromManifest(g) == g)
 
   /** Snapshot-keyed retention WITH a one-snapshot grace window: keep
     * the last [[keepSnapshots]] committed full snapshots PLUS the one
@@ -307,8 +299,8 @@ final class PrefixIndexStore(
     if (fulls.size > keepSnapshots + 1) {
       val keepFrom = fulls(fulls.size - keepSnapshots.toInt - 1)
       Seq(hashedStore, dfsStore, prefixStore).foreach(_.cleanBelow(keepFrom))
-      committedIds().filter(_ < keepFrom)
-        .foreach(g => fs.delete(fs.resolve(commitsDir, s"$g")))
+      commits.versions().filter(_ < keepFrom)
+        .foreach(g => fs.delete(commits.file(g)))
     }
   }
 
@@ -330,11 +322,7 @@ final class PrefixIndexStore(
     * missing generation silently yields zero rows for it, which would
     * score batches against a PARTIAL corpus: deduped docs would pass). */
   private def resolveValidated(snapshotId: Option[Long]): (Long, Long) = {
-    // One _commits listing and one listing per posting store for the whole
-    // validation — this runs per scoring call on the ingest hot path, and a
-    // thousands-of-deltas chain makes repeated directory listings real
-    // filesystem metadata work.
-    val committed = committedIds()
+    val committed = commits.versions()
     val g = snapshotId.orElse(committed.lastOption).getOrElse(
       throw new IllegalStateException(
         s"no complete prefix-index snapshot at $path — call snapshot() first"))
@@ -342,8 +330,7 @@ final class PrefixIndexStore(
       s"prefix-index generation $g at $path has no commit manifest " +
         "(expired by retention or never completed) — score against " +
         s"latestSnapshot=${committed.lastOption} or re-snapshot")
-    val dfsGens = dfsStore.generations.toSet
-    if (!dfsGens.contains(g)) throw new IllegalStateException(
+    if (!dfsStore.hasGeneration(g)) throw new IllegalStateException(
       s"prefix-index generation $g (dfs) is not present at $path " +
         s"(expired by retention or never completed) — score against " +
         s"latestSnapshot=${committed.lastOption} or re-snapshot")
@@ -352,16 +339,16 @@ final class PrefixIndexStore(
     // ranked under — scoring with it missing would re-rank the batch
     // against an empty order and silently MISS pairs (completeness needs
     // the shared order, not just the postings).
-    if (!dfsGens.contains(base)) throw new IllegalStateException(
+    if (!dfsStore.hasGeneration(base)) throw new IllegalStateException(
       s"prefix-index base snapshot $base (dfs) is missing at $path — the " +
         s"frozen order generation $g was ranked under is gone; re-snapshot")
-    val have = Seq(hashedStore, prefixStore).map(_.generations.toSet)
-    val need = (base to g).toSet
-    for ((h, s) <- have.zip(Seq("hashed", "prefix")); if !need.subsetOf(h))
-      throw new IllegalStateException(
-        s"prefix-index generations ${(need -- h).toSeq.sorted.mkString(",")} " +
-          s"($s) missing at $path — the base..$g append chain has retention " +
+    for ((store, name) <- Seq(hashedStore -> "hashed", prefixStore -> "prefix")) {
+      val missing = (base to g).filterNot(store.hasGeneration)
+      if (missing.nonEmpty) throw new IllegalStateException(
+        s"prefix-index generations ${missing.mkString(",")} " +
+          s"($name) missing at $path — the base..$g append chain has retention " +
           "holes; re-snapshot (and raise keepSnapshots for append-heavy use)")
+    }
     (g, base)
   }
 

@@ -10,14 +10,13 @@ package graft.store
   *
   * Protocol (the classic fencing-token pattern):
   *
-  *   - CLAIM (construction): land an immutable, uniquely-named
-  *     `epoch.<N>` file (N = max on disk + 1) under
-  *     `<dir>/.writer_epochs/` via [[graft.FsIO.rename]]'s no-replace
-  *     contract — an atomic create on nio and HDFS (both pinned by
-  *     FsIOSpec). A lost race (a concurrent claimant won the same N)
-  *     retries above the winner. The winner sweeps epochs more than 4
-  *     behind itself (a short takeover audit trail) and stale
-  *     `.claim_*` staging left by claimants that died mid-claim.
+  *   - CLAIM (construction): commit `epoch.<N>` (N = max on disk + 1)
+  *     under `<dir>/.writer_epochs/` as a [[graft.VersionedDir]]
+  *     version — an atomic exclusive create on nio and HDFS (both
+  *     pinned by FsIOSpec). A lost race (a concurrent claimant won the
+  *     same N) retries above the winner. The winner keeps the newest 4
+  *     epochs (a short takeover audit trail) and sweeps temp files
+  *     left by claimants that died mid-claim.
   *   - CHECK (before every commit-side mutation): list the epochs; a
   *     NEWER epoch means a successor owns the directory — throw
   *     [[FencedWriterException]] before staging, deleting, or
@@ -36,59 +35,26 @@ package graft.store
 final class WriterFence(val dir: String, val owner: String,
                         val fs: graft.FsIO = graft.FsIO.local) {
 
-  private def epochsDir: String = fs.resolve(dir, ".writer_epochs")
+  private val epochs = fs.versioned(fs.resolve(dir, ".writer_epochs"), "epoch.")
 
   /** Highest claimed epoch on disk (0 when none). A listing + name
     * parse — no file reads, no payload data touched. */
-  def liveEpoch(): Long =
-    (if (fs.isDirectory(epochsDir)) fs.list(epochsDir) else Seq.empty)
-      .collect { case n if n.matches("epoch\\.\\d{1,18}") =>
-        n.stripPrefix("epoch.").toLong }
-      .foldLeft(0L)(math.max)
+  def liveEpoch(): Long = epochs.latest().getOrElse(0L)
 
   /** This handle's token, claimed at construction. */
   val epoch: Long = {
-    fs.mkdirs(epochsDir)
-    var attempt = 0
-    var claimed = -1L
-    while (claimed < 0 && attempt < 64) {
-      val next = liveEpoch() + 1L
-      val tmp = fs.resolve(epochsDir,
-        s".claim_${java.util.UUID.randomUUID().toString.take(13)}")
-      fs.write(tmp, s"$owner pid=${ProcessHandle.current().pid()}"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      try {
-        fs.rename(tmp, fs.resolve(epochsDir, s"epoch.$next"))
-        fs.list(epochsDir).foreach { n =>
-          if (n.startsWith(".claim_") ||
-            (n.matches("epoch\\.\\d{1,18}") &&
-              n.stripPrefix("epoch.").toLong <= next - 4L))
-            fs.delete(fs.resolve(epochsDir, n))
-        }
-        claimed = next
-      } catch {
-        // Lost the race. Two shapes (review r17 session pass): the
-        // target epoch.<N> already exists (our rename collides), OR
-        // our .claim_* STAGING vanished — the winner's post-claim
-        // sweep deletes every .claim_* stray, including a concurrent
-        // loser's still-pending temp, so the loser's rename throws
-        // missing-SOURCE, not existing-target. Both mean exactly
-        // "someone else claimed N" and must retry above the winner;
-        // letting the second shape escape crashed the constructor on
-        // the primary concurrent-open path the fence exists for.
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.NoSuchFileException |
-             _: java.io.FileNotFoundException =>
-          fs.delete(tmp)
-          attempt += 1
-      }
-    }
-    if (claimed < 0)
-      throw new IllegalStateException(
+    fs.mkdirs(epochs.dir)
+    val stamp = s"$owner pid=${ProcessHandle.current().pid()}"
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    // A lost race (a rival landed the same number, or its sweep took
+    // our temp file) retries above the winner.
+    val claimed = Iterator.continually(liveEpoch() + 1L).take(64)
+      .find(next => epochs.commit(next, stamp))
+      .getOrElse(throw new IllegalStateException(
         s"$owner@$dir: could not claim a writer epoch after 64 " +
           "attempts — a claim storm this sustained means something " +
-          "is opening fenced writers in a loop")
+          "is opening fenced writers in a loop"))
+    epochs.sweep(keep = 4)
     claimed
   }
 

@@ -92,16 +92,22 @@ class BenchSpec extends AnyFunSuite {
     // was the host. The canary is the proof: under load its factor must
     // rise, and a CPU-bound "query" time DIVIDED by the factor must stay
     // put even though the raw time moved.
-    def measure(): (Double, Double) = {
-      val cal = Bench.calibrationPhase(3)
+    // Min of `samples` (canary, query) pairs, interleaved so both mins
+    // span the whole phase. The idle phases take 5: with 3 canary runs
+    // and then 3 query runs, a host burst covering one block and not the
+    // other drifted two quiet-host idle phases 1.22-1.29× apart (the
+    // 1.2× gate), and the canary cancelled instead of asserting.
+    def measure(samples: Int): (Double, Double) = {
       // The stand-in query: the same deterministic work at 4× size —
       // CPU-bound like the canary, so its true cost is host-invariant.
-      val q = (1 to 3).map(_ => Bench.calibrationRun(rounds = 384)).min
-      (cal, q)
+      val runs = (1 to samples).map(_ =>
+        (Bench.calibrationPhase(1), Bench.calibrationRun(rounds = 384)))
+      (runs.map(_._1).min, runs.map(_._2).min)
     }
     // Untimed JIT warm-up: the first compilations of the loop must not
     // land inside the idle baseline (they read as phantom load).
-    (1 to 3).foreach(_ => Bench.calibrationRun())
+    (1 to 8).foreach(_ => Bench.calibrationRun())
+    (1 to 2).foreach(_ => Bench.calibrationRun(rounds = 384))
     // Ambient load first. The test's premise is an IDLE baseline; on a
     // host whose other work already fills every core, or whose speed
     // moves while the test runs (the round-18 failure under io_factor
@@ -116,7 +122,7 @@ class BenchSpec extends AnyFunSuite {
     val ambientCores = (os.getCpuLoad - os.getProcessCpuLoad) * cores
     // Two idle phases bracket the loaded one: a baseline taken inside a
     // burst shows as disagreement between them.
-    val idleBefore = measure()
+    val idleBefore = measure(5)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val spinners = (1 to 2 * cores).map { _ =>
       val t = new Thread(() => {
@@ -131,12 +137,14 @@ class BenchSpec extends AnyFunSuite {
       t
     }
     val (calLoad, qLoad) =
-      try measure()
+      try measure(3)
       finally {
         stop.set(true)
         spinners.foreach(_.join(2000))
       }
-    val idleAfter = measure()
+    // Let the host settle after the spinners before the second baseline.
+    Thread.sleep(3000)
+    val idleAfter = measure(5)
     val calIdle = math.min(idleBefore._1, idleAfter._1)
     val qIdle = math.min(idleBefore._2, idleAfter._2)
     def spread(a: Double, b: Double) = math.max(a / b, b / a)

@@ -18,8 +18,13 @@ object CrashFs {
   *     performs the DELETE, optionally copies `tornBytes` of the
   *     staging in (the copy-then-delete tear), and dies.
   *   - `rename` dies BEFORE doing anything when `crashRenameTarget`
-  *     suffix-matches — the "crash between deleteRecursively and
-  *     rename" window of the ParquetStore generation swaps.
+  *     suffix-matches — for ParquetStore, the snapshot log's commit
+  *     (`_snapshots/<version>`).
+  *   - `delete`/`deleteRecursively` die BEFORE doing anything when the
+  *     path CONTAINS `crashDeleteTarget` (e.g. `rst_id=2`: the first
+  *     delete of a superseded file or directory of generation 2, after
+  *     its snapshot committed).
+  *   - `listed` records every directory `list` was asked for.
   *   - After a crash fires, EVERY subsequent call throws too: a dead
   *     process performs no in-process recovery. `revive()` is the
   *     rerun.
@@ -32,11 +37,13 @@ object CrashFs {
 final class CrashFs(inner: FsIO = NioFs) extends FsIO {
   @volatile var crashSwapTarget: String = null
   @volatile var crashRenameTarget: String = null
+  @volatile var crashDeleteTarget: String = null
   @volatile var tornBytes: Int = -1
   @volatile var dead: Boolean = false
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   def revive(): Unit = {
     dead = false; crashSwapTarget = null; crashRenameTarget = null
-    tornBytes = -1
+    crashDeleteTarget = null; tornBytes = -1
   }
   private def live(): Unit = if (dead) throw new CrashFs.CrashPoint
 
@@ -47,7 +54,9 @@ final class CrashFs(inner: FsIO = NioFs) extends FsIO {
     live(); inner.isDirectory(path)
   }
   override def mkdirs(dir: String): Unit = { live(); inner.mkdirs(dir) }
-  override def list(dir: String): Seq[String] = { live(); inner.list(dir) }
+  override def list(dir: String): Seq[String] = {
+    live(); listed.add(dir); inner.list(dir)
+  }
   override def size(path: String): Long = { live(); inner.size(path) }
   override def read(path: String): Array[Byte] = { live(); inner.read(path) }
   override def readRange(path: String, off: Long, len: Int): Array[Byte] = {
@@ -81,9 +90,18 @@ final class CrashFs(inner: FsIO = NioFs) extends FsIO {
     }
     inner.rename(src, target)
   }
-  override def delete(path: String): Boolean = { live(); inner.delete(path) }
+  private def deleting(path: String): Unit = {
+    live()
+    if (crashDeleteTarget != null && path.contains(crashDeleteTarget)) {
+      dead = true
+      throw new CrashFs.CrashPoint
+    }
+  }
+  override def delete(path: String): Boolean = {
+    deleting(path); inner.delete(path)
+  }
   override def deleteRecursively(path: String): Unit = {
-    live(); inner.deleteRecursively(path)
+    deleting(path); inner.deleteRecursively(path)
   }
 }
 
@@ -295,155 +313,199 @@ class CrashRecoverySpec extends SparkSpec {
     assert(!NioFs.list(dir).exists(_.startsWith(".staging_e_")))
   }
 
-  test("ParquetStore: a crashed generation swap is promoted at reopen") {
+
+  // ---- ParquetStore: one snapshot commit per mutation ----------------
+  // Kill points: the log rename (`_snapshots/<v>`, BEFORE the commit —
+  // the mutation must leave no trace) and the first delete of a
+  // superseded file (AFTER it — the mutation must be whole).
+
+  private val kv = {
     import org.apache.spark.sql.types._
+    StructType(Seq(StructField("k", StringType), StructField("v", LongType)))
+  }
+
+  private def pstore(path: String, fs: FsIO, name: String) =
+    new ParquetStore(spark, kv, path, tableName = name,
+      collapseKeys = Seq("k"), fs = fs)
+
+  /** Three generations of (k<g>, g) + (shared, g): six rows. */
+  private def threeGens(path: String, name: String): ParquetStore = {
     val sparkSession = spark
     import sparkSession.implicits._
-    val path = tmp("pstore")
-    val schema = StructType(Seq(StructField("k", StringType),
-      StructField("v", LongType)))
-    def open(fs: FsIO) = new ParquetStore(spark, schema, path,
-      tableName = "crash_store", collapseKeys = Seq("k"), fs = fs)
-    val store = open(NioFs)
-    store.reset()
-    (1L to 3L).foreach { g =>
-      store.append(Seq((s"k$g", g), ("shared", g)).toDF("k", "v"))
-    }
-    // eraseKeys dies between deleteRecursively(rst_id=2) and the
-    // staged rename: generation 2's surviving rows exist only in the
-    // multi-rewrite staging's rst_id=2 subdir (r17 layout — all
-    // touched generations staged under one root with one top-level
-    // _SUCCESS; the in-process rename fallback finds a dead process
-    // too).
-    val cfs = new CrashFs
-    cfs.crashRenameTarget = "rst_id=2"
-    val crashed = open(cfs)
-    intercept[CrashFs.CrashPoint] {
-      crashed.eraseKeys(Seq("k2").toDF("k").localCheckpoint(true),
-        Seq("k"))
-    }
-    assert(!NioFs.exists(NioFs.resolve(path, "rst_id=2")))
-    val multi = NioFs.resolve(path, ".staging_rw_multi")
-    assert(NioFs.exists(NioFs.resolve(multi, "_SUCCESS")))
-    assert(NioFs.exists(NioFs.resolve(multi, "rst_id=2")))
-    // Worse still (review r17): deleteRecursively is not atomic — a
-    // death MID-delete leaves a PARTIAL target directory. Recovery
-    // must still prefer the _SUCCESS-marked staging (re-running the
-    // swap), never keep the half-unlinked target and drop the only
-    // complete copy.
-    NioFs.mkdirs(NioFs.resolve(path, "rst_id=2"))
-    NioFs.write(NioFs.resolve(NioFs.resolve(path, "rst_id=2"),
-      "part-00000-torn.parquet"), Array[Byte](1, 2, 3))
-    // Reopen = the rerun: construction promotes the staged copy — the
-    // ERASED rewrite of generation 2, so the erase is effectively
-    // committed — and, the loss-prevention point, generation 2's
-    // NON-victim rows are back on disk instead of gone with the
-    // deleted directory.
-    val reopened = open(NioFs)
-    assert(NioFs.exists(NioFs.resolve(path, "rst_id=2")))
-    assert(!NioFs.exists(NioFs.resolve(path, ".staging_rw_multi")))
-    val ks = reopened.latestPerKey(Seq("k")).select("k").collect()
+    val s = pstore(path, NioFs, name)
+    (1L to 3L).foreach(g =>
+      s.append(Seq((s"k$g", g), ("shared", g)).toDF("k", "v")))
+    s
+  }
+
+  private def victims(k: String) = {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    Seq(k).toDF("k").localCheckpoint(true)
+  }
+
+  /** The version the store's next commit lands as. */
+  private def nextLog(s: ParquetStore) = s"_snapshots/${s.snapshotVersion() + 1}"
+
+  /** Every data file on disk is named by the latest snapshot. */
+  private def noDebris(s: ParquetStore): Unit = {
+    val onDisk = NioFs.list(s.path).filter(_.startsWith("rst_id="))
+      .flatMap(d => NioFs.list(NioFs.resolve(s.path, d)))
+      .count(_.endsWith(".parquet"))
+    assert(onDisk.toLong === s.generations.map(s.generationFileCount).sum,
+      s"files on disk that no snapshot names: ${NioFs.list(s.path)}")
+  }
+
+  private def keys(s: ParquetStore) =
+    s.latestPerKey(Seq("k")).select("k").collect().map(_.getString(0)).toSet
+
+  private def gen2(s: ParquetStore) =
+    s.selectAll.filter(col("v") === 2L).select("k").collect()
       .map(_.getString(0)).toSet
-    assert(ks === Set("k1", "k3", "shared"))
-    val gen2 = reopened.selectAll.filter(col("v") === 2L)
-      .select("k").collect().map(_.getString(0)).toSet
-    assert(gen2 === Set("shared"),
-      s"generation 2's surviving rows must be recovered: $gen2")
+
+  test("ParquetStore: an erase killed before its commit changes nothing") {
+    val path = tmp("pstore_pre")
+    val store = threeGens(path, "crash_pre")
+    val cfs = new CrashFs
+    cfs.crashRenameTarget = nextLog(store)
+    intercept[CrashFs.CrashPoint] {
+      pstore(path, cfs, "crash_pre_dead").eraseKeys(victims("k2"), Seq("k"))
+    }
+    // The rewrite's files are on disk, but no snapshot names them.
+    val reopened = pstore(path, NioFs, "crash_pre_re")
+    assert(reopened.selectAll.count() === 6L)
+    assert(keys(reopened) === Set("k1", "k2", "k3", "shared"))
+    noDebris(reopened)
+    assert(!NioFs.list(NioFs.resolve(path, "_snapshots")).exists(_.startsWith(".")),
+      "the killed commit's temp file must be swept")
+    // The re-run converges.
+    assert(reopened.eraseKeys(victims("k2"), Seq("k")) === 1L)
+    assert(keys(reopened) === Set("k1", "k3", "shared"))
+    assert(gen2(reopened) === Set("shared"))
+  }
+
+  test("ParquetStore: an erase killed after its commit is whole at reopen") {
+    val path = tmp("pstore_post")
+    val store = threeGens(path, "crash_post")
+    val before = NioFs.list(NioFs.resolve(path, "rst_id=2"))
+      .filter(_.endsWith(".parquet"))
+    val cfs = new CrashFs
+    cfs.crashDeleteTarget = "rst_id=2"
+    intercept[CrashFs.CrashPoint] {
+      pstore(path, cfs, "crash_post_dead").eraseKeys(victims("k2"), Seq("k"))
+    }
+    // Committed: the superseded file is still on disk, and unread.
+    assert(before.forall(f =>
+      NioFs.exists(NioFs.resolve(NioFs.resolve(path, "rst_id=2"), f))))
+    assert(store.selectAll.count() === 5L)
+    val reopened = pstore(path, NioFs, "crash_post_re")
     assert(reopened.selectAll.count() === 5L)
-    // The erase replays idempotently on top of the recovered state.
-    reopened.eraseKeys(Seq("k2").toDF("k").localCheckpoint(true),
-      Seq("k"))
-    val after = reopened.latestPerKey(Seq("k")).select("k").collect()
-      .map(_.getString(0)).toSet
-    assert(after === Set("k1", "k3", "shared"))
+    assert(keys(reopened) === Set("k1", "k3", "shared"))
+    assert(gen2(reopened) === Set("shared"))
+    // Reopen deleted what the snapshot no longer names.
+    assert(before.forall(f =>
+      !NioFs.exists(NioFs.resolve(NioFs.resolve(path, "rst_id=2"), f))))
+    noDebris(reopened)
   }
 
-  test("ParquetStore: a crashed generation swap is promoted by the NEXT " +
-       "in-process rewrite, not destroyed (advice r17, high)") {
-    import org.apache.spark.sql.types._
-    val sparkSession = spark
-    import sparkSession.implicits._
-    val path = tmp("pstore_inproc")
-    val schema = StructType(Seq(StructField("k", StringType),
-      StructField("v", LongType)))
+  test("ParquetStore: the live handle converges after killed erases") {
+    val path = tmp("pstore_live")
+    threeGens(path, "crash_live")
     val cfs = new CrashFs
-    val store = new ParquetStore(spark, schema, path,
-      tableName = "crash_store_inproc", collapseKeys = Seq("k"), fs = cfs)
-    store.reset()
-    (1L to 3L).foreach { g =>
-      store.append(Seq((s"k$g", g), ("shared", g)).toDF("k", "v"))
-    }
-    // First erase dies between deleteRecursively(rst_id=2) and the
-    // staged rename; the in-process fallback dies too (dead-process
-    // model). Generation 2's surviving rows now exist ONLY in the
-    // multi-rewrite staging.
-    cfs.crashRenameTarget = "rst_id=2"
+    val store = pstore(path, cfs, "crash_live_h")
+    // Killed before its commit, then — same handle, no reopen — killed
+    // after it: the second attempt applies the erase.
+    cfs.crashRenameTarget = nextLog(store)
     intercept[CrashFs.CrashPoint] {
-      store.eraseKeys(Seq("k2").toDF("k").localCheckpoint(true), Seq("k"))
+      store.eraseKeys(victims("k2"), Seq("k"))
     }
-    assert(!NioFs.exists(NioFs.resolve(path, "rst_id=2")))
-    assert(NioFs.exists(NioFs.resolve(path, ".staging_rw_multi")))
-    // The process stays ALIVE (no reopen, so open-time recovery never
-    // runs) and issues another mutation on the SAME handle — the next
-    // trigger's ring trim in the advice scenario. Before the fix this
-    // deleted the staging outright: generation 2's non-victim rows
-    // ("shared", 2) were gone permanently.
     cfs.revive()
-    store.eraseKeys(Seq("k3").toDF("k").localCheckpoint(true), Seq("k"))
-    val ks = store.latestPerKey(Seq("k")).select("k").collect()
-      .map(_.getString(0)).toSet
-    assert(ks === Set("k1", "shared"), s"both erases applied: $ks")
-    val gen2 = store.selectAll.filter(col("v") === 2L)
-      .select("k").collect().map(_.getString(0)).toSet
-    assert(gen2 === Set("shared"),
-      s"generation 2's surviving rows must be recovered, not destroyed: $gen2")
-    assert(!NioFs.exists(NioFs.resolve(path, ".staging_rw_multi")))
+    assert(keys(store) === Set("k1", "k2", "k3", "shared"))
+    cfs.crashDeleteTarget = "rst_id=2"
+    intercept[CrashFs.CrashPoint] {
+      store.eraseKeys(victims("k2"), Seq("k"))
+    }
+    cfs.revive()
+    // The next rewrite on the SAME handle runs past both crashes' debris.
+    store.eraseKeys(victims("k3"), Seq("k"))
+    assert(keys(store) === Set("k1", "shared"), "both erases applied")
+    assert(gen2(store) === Set("shared"),
+      "generation 2 keeps its surviving row")
+    assert(store.generations === Seq(1L, 2L, 3L))
+    noDebris(pstore(path, NioFs, "crash_live_re"))
   }
 
-  test("ParquetStore: crashed COMPACT and COLLAPSE swaps are promoted at reopen too") {
-    import org.apache.spark.sql.types._
+  test("ParquetStore: compact and collapse killed at both commit points") {
     val sparkSession = spark
     import sparkSession.implicits._
-    val schema = StructType(Seq(StructField("k", StringType),
-      StructField("v", LongType)))
+    for (afterCommit <- Seq(false, true)) {
+      // Compact: four files → one.
+      val cpPath = tmp("pcompact")
+      val cp = pstore(cpPath, NioFs, "crash_compact")
+      cp.append((1L to 6L).map(i => (s"k$i", i)).toDF("k", "v").repartition(4))
+      val cfs = new CrashFs
+      if (afterCommit) cfs.crashDeleteTarget = "rst_id=1"
+      else cfs.crashRenameTarget = nextLog(cp)
+      intercept[CrashFs.CrashPoint] {
+        pstore(cpPath, cfs, "crash_compact_dead").compact(1L)
+      }
+      val cpBack = pstore(cpPath, NioFs, "crash_compact_re")
+      assert(cpBack.selectAll.count() === 6L, s"afterCommit=$afterCommit")
+      assert(cpBack.generationFileCount(1L) === (if (afterCommit) 1L else 4L))
+      noDebris(cpBack)
 
-    // Compact: .staging_cp_<g> holds the repartitioned generation.
-    val cpPath = tmp("pcompact")
-    def openCp(fs: FsIO) = new ParquetStore(spark, schema, cpPath,
-      tableName = "crash_compact", fs = fs)
-    val cp = openCp(NioFs)
-    cp.reset()
-    cp.append((1L to 6L).map(i => (s"k$i", i)).toDF("k", "v")
-      .repartition(4))
-    val cfs = new CrashFs
-    cfs.crashRenameTarget = "rst_id=1"
-    intercept[CrashFs.CrashPoint] { openCp(cfs).compact(1L) }
-    assert(!NioFs.exists(NioFs.resolve(cpPath, "rst_id=1")))
-    val cpBack = openCp(NioFs)
-    assert(cpBack.selectAll.count() === 6L,
-      "the compacted generation must be back after recovery")
-    assert(!NioFs.exists(NioFs.resolve(cpPath, ".staging_cp_1")))
-
-    // Collapse: .staging_cl_<target> holds the folded base.
-    val clPath = tmp("pcollapse")
-    def openCl(fs: FsIO) = new ParquetStore(spark, schema, clPath,
-      tableName = "crash_collapse", collapseKeys = Seq("k"), fs = fs)
-    val cl = openCl(NioFs)
-    cl.reset()
-    (1L to 4L).foreach(g =>
-      cl.append(Seq(("shared", g), (s"k$g", g)).toDF("k", "v")))
-    val cfs2 = new CrashFs
-    cfs2.crashRenameTarget = "rst_id=3"
-    intercept[CrashFs.CrashPoint] {
-      openCl(cfs2).collapseToLatest(Seq("k"), keepRecent = 1)
+      // Collapse: generations 1-3 fold into slot 3, 4 is kept.
+      val clPath = tmp("pcollapse")
+      val cl = pstore(clPath, NioFs, "crash_collapse")
+      (1L to 4L).foreach(g =>
+        cl.append(Seq(("shared", g), (s"k$g", g)).toDF("k", "v")))
+      val cfs2 = new CrashFs
+      if (afterCommit) cfs2.crashDeleteTarget = "rst_id=1"
+      else cfs2.crashRenameTarget = nextLog(cl)
+      intercept[CrashFs.CrashPoint] {
+        pstore(clPath, cfs2, "crash_collapse_dead")
+          .collapseToLatest(Seq("k"), keepRecent = 1)
+      }
+      val clBack = pstore(clPath, NioFs, "crash_collapse_re")
+      val latest = clBack.latestPerKey(Seq("k")).select("k", "v").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(latest === Map("shared" -> 4L, "k1" -> 1L, "k2" -> 2L,
+        "k3" -> 3L, "k4" -> 4L), s"afterCommit=$afterCommit: $latest")
+      assert(clBack.generations ===
+        (if (afterCommit) Seq(3L, 4L) else Seq(1L, 2L, 3L, 4L)))
+      assert(NioFs.list(clPath).count(_.startsWith("rst_id=")) ===
+        clBack.generations.size)
+      noDebris(clBack)
     }
-    assert(!NioFs.exists(NioFs.resolve(clPath, "rst_id=3")))
-    val clBack = openCl(NioFs)
-    val latest = clBack.latestPerKey(Seq("k")).select("k", "v").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(latest === Map("shared" -> 4L, "k1" -> 1L, "k2" -> 2L,
-      "k3" -> 3L, "k4" -> 4L),
-      s"latest-per-key must survive the crashed collapse: $latest")
-    assert(!NioFs.exists(NioFs.resolve(clPath, ".staging_cl_3")))
+  }
+
+  test("ParquetStore: a half-deleted superseded directory changes no read") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val path = tmp("pstore_half")
+    val store = pstore(path, NioFs, "crash_half")
+    (1L to 4L).foreach(g =>
+      store.append(Seq(("shared", g), (s"k$g", g)).toDF("k", "v")
+        .repartition(2)))
+    val cfs = new CrashFs
+    cfs.crashDeleteTarget = "rst_id=1"
+    intercept[CrashFs.CrashPoint] {
+      pstore(path, cfs, "crash_half_dead").collapseToLatest(Seq("k"))
+    }
+    // Tear generation 1's superseded directory: one file gone, one torn.
+    val g1 = NioFs.resolve(path, "rst_id=1")
+    val parts = NioFs.list(g1).filter(_.endsWith(".parquet")).sorted
+    NioFs.delete(NioFs.resolve(g1, parts.head))
+    NioFs.write(NioFs.resolve(g1, "part-00000-torn.parquet"), Array[Byte](1, 2, 3))
+    val expect = Set(("shared", 4L), ("k1", 1L), ("k2", 2L), ("k3", 3L), ("k4", 4L))
+    def rows(s: ParquetStore) = s.selectAll.select("k", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    // Both the live handle and a fresh one read the committed base.
+    assert(rows(store) === expect + (("shared", 3L)))
+    assert(store.selectAll.count() === 6L)
+    val reopened = pstore(path, NioFs, "crash_half_re")
+    assert(rows(reopened) === rows(store))
+    assert(!NioFs.exists(g1) && !NioFs.exists(NioFs.resolve(path, "rst_id=2")))
+    noDebris(reopened)
   }
 }
