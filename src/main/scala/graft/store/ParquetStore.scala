@@ -228,9 +228,14 @@ final class ParquetStore(
   // ---- THE SNAPSHOT LOG ---------------------------------------------
 
   /** A committed snapshot and its log version (0: nothing committed
-    * yet). The relation over its files is built on first read. */
+    * yet). The relation over its files, and the store's rows in schema
+    * order over it, are built on first read and then kept: every
+    * [[selectAll]] of one state returns the SAME frame, so a reader can
+    * tell two states apart by reference (the HTTP server's kept answers
+    * key on it — the file index compares equal across snapshots). */
   private final class State(val version: Long, val snap: Snapshot) {
     lazy val df: DataFrame = relation(snap)
+    lazy val all: DataFrame = ordered(df)
   }
   /** `= _`, not `= null`: an explicit initializer would run after the
     * constructor's `open()`/`registerView()` and drop their entry. */
@@ -775,10 +780,13 @@ final class ParquetStore(
     * read, not the session) makes that a graceful skip of superseded
     * files instead of a failed query. */
   private def raw(filter: Option[org.apache.spark.sql.Column]): DataFrame = {
-    val base = state().df
-    val filtered = filter.map(base.filter).getOrElse(base)
-    filtered.select(fullSchema.fields.map(f => col(f.name)).toIndexedSeq: _*)
+    val st = state()
+    filter.fold(st.all)(cond => ordered(st.df.filter(cond)))
   }
+
+  /** The store's columns, in schema order. */
+  private def ordered(df: DataFrame): DataFrame =
+    df.select(fullSchema.fieldNames.map(col).toIndexedSeq: _*)
 
   /** The relation over `snap`'s files, built on the DRIVER without a
     * directory listing: Spark's file index takes its leaf files from a
@@ -806,7 +814,7 @@ final class ParquetStore(
       schema, None, new ParquetFileFormat, options)(spark))
   }
 
-  /** Q1 select-all. */
+  /** Q1 select-all: one frame per committed state (see `State`). */
   def selectAll: DataFrame = raw(None)
 
   /** Q2 SQL over the registered view. */

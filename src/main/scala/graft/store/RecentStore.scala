@@ -76,8 +76,8 @@ final class RecentStore(
     * semantics (`models.py:533-536`): counter = MAX(rst_id)+1, or 1 if empty. */
   def restoreFrom(existing: DataFrame): this.type = this.synchronized {
     data = GenerationStore.align(existing, fullSchema)
-    counter = maxRstId.map(_ + 1L).getOrElse(1L)
     registerView()
+    counter = maxRstId.map(_ + 1L).getOrElse(1L)
     this
   }
 
@@ -90,8 +90,7 @@ final class RecentStore(
     checkSoftLimit(batch)
     val stamped = GenerationStore.align(batch, schema)
       .withColumn("rst_id", lit(counter))
-    data = data.unionByName(stamped)
-    commitGeneration()
+    commitGeneration(data.unionByName(stamped))
     this
   }
 
@@ -102,17 +101,21 @@ final class RecentStore(
         s"batch of $n rows exceeds soft limit $lim (DumpTable soft_limit semantics)")
     }
 
-  /** The post-mutation tail shared by [[append]] and [[merge]]: one
-    * generation committed — bump counters, run the retention trigger,
-    * truncate lineage on cadence, re-register the view. One copy, so the
-    * two mutators cannot drift. */
-  private def commitGeneration(): Unit = {
-    counter += 1
+  /** The post-mutation tail shared by [[append]] and [[merge]]: commit
+    * `grown` as the next generation — run the retention trigger,
+    * truncate lineage on cadence, re-register the view ONCE, and only
+    * then bump the counter, so a reader that sees the new counter (`/rst`)
+    * finds the generation in the view. One copy, so the two mutators
+    * cannot drift. */
+  private def commitGeneration(grown: DataFrame): Unit = {
+    val next = counter + 1
     appends += 1
-    if (counter % cleanFreq == 0) clean()
-    if (materializeEvery > 0 && appends % materializeEvery == 0)
-      data = data.localCheckpoint(eager = true)
+    val kept = if (next % cleanFreq == 0) retained(grown, next, -1L) else grown
+    data =
+      if (materializeEvery > 0 && appends % materializeEvery == 0) kept.localCheckpoint(eager = true)
+      else kept
     registerView()
+    counter = next
   }
 
   /** MERGE upsert — the keyed companion of [[append]]: rows of `batch`
@@ -133,10 +136,9 @@ final class RecentStore(
     GenerationStore.requireKeyColumns("merge", schema, keys)
     checkSoftLimit(batch)
     val aligned = GenerationStore.align(batch, schema)
-    data = data
+    commitGeneration(data
       .join(aligned.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .unionByName(aligned.withColumn("rst_id", lit(counter)))
-    commitGeneration()
+      .unionByName(aligned.withColumn("rst_id", lit(counter))))
     this
   }
 
@@ -144,11 +146,15 @@ final class RecentStore(
     * older than `counter - interval`. `clean(0)` empties the store (doctest
     * `models.py:718-727`). */
   def clean(interval: Long = -1L): this.type = this.synchronized {
-    data = data.filter(col("rst_id") >=
-      lit(GenerationStore.retentionFloor(counter, interval, cleanInterval)))
+    data = retained(data, counter, interval)
     registerView()
     this
   }
+
+  /** `rows` without the generations retention expires at counter `at`. */
+  private def retained(rows: DataFrame, at: Long, interval: Long): DataFrame =
+    rows.filter(col("rst_id") >=
+      lit(GenerationStore.retentionFloor(at, interval, cleanInterval)))
 
   /** Q1 select-all scan (`models.py:309-333`). */
   def selectAll: DataFrame = data
@@ -178,9 +184,9 @@ final class RecentStore(
   /** Q4 reconnect/reset (`models.py:496-505`): in-memory db reopen = wipe. */
   def reset(): this.type = this.synchronized {
     data = emptyData()
-    counter = 1L
     appends = 0
     registerView()
+    counter = 1L
     this
   }
 

@@ -685,4 +685,164 @@ class StoreHttpServerSpec extends SparkSpec {
       assert(sPost === 404)
     } finally srv.stop()
   }
+
+  // ---- kept answers: every read answered once per store state --------
+
+  private val keptSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_key", StringType), StructField("n", LongType)))
+  }
+
+  private def docs(rows: (String, Long)*) = {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    rows.toDF("doc_key", "n")
+  }
+
+  private def tmpDir(): String =
+    java.nio.file.Files.createTempDirectory("graft_http_kept").toString
+
+  /** Both deployments, each opened empty under a table name. */
+  private val deployments: Seq[(String, String => graft.store.GenerationStore)] = Seq(
+    "RecentStore" -> (t => new graft.store.RecentStore(spark, keptSchema, t, cleanFreq = 1000L)),
+    "ParquetStore" -> (t => new graft.store.ParquetStore(spark, keptSchema, tmpDir(), t,
+      cleanFreq = 1000L)))
+
+  for ((kind, open) <- deployments) {
+    val t = s"kept_${kind.toLowerCase}"
+
+    test(s"$kind: a repeated read is served from its kept body with no Spark job, until the next append") {
+      val store = open(s"${t}_rep")
+      store.append(docs("https://a.org/1" -> 1L))
+      val srv = new StoreHttpServer(store).start()
+      try {
+        val total = s"/c/${enc(s"SELECT SUM(n) AS n FROM ${t}_rep")}"
+        val reads = Seq(total, s"/cs/${enc(s"SELECT n FROM ${t}_rep")}",
+          s"/c/${enc("""{"n": ["lte", 0]}""")}/EOE", "/a/*", s"/a/${t}_rep",
+          "/rv/1", "/dv/1", "/sr/n/0:100")
+        val first = reads.map(get(srv.port, _))
+        assert(first.forall(_._1 == 200), first)
+        assert(first.head._2 === """[{"n":1}]""")
+        val hits = srv.keptHits.get
+        assert(jobsDuring { assert(reads.map(get(srv.port, _)) === first) } === 0)
+        assert(srv.keptHits.get - hits === reads.size.toLong)
+        store.append(docs("https://a.org/2" -> 2L))
+        // Concurrent requests at the new state: one computes, the others
+        // wait and take its body.
+        val misses = srv.keptMisses.get
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        implicit val ec: ExecutionContext = ExecutionContext.global
+        val got = Await.result(Future.sequence((1 to 4).map(_ => Future(get(srv.port, total)))),
+          scala.concurrent.duration.Duration(60, "s"))
+        assert(got === Seq.fill(4)((200, """[{"n":3}]""")))
+        assert(srv.keptMisses.get - misses === 1L)
+        assert(get(srv.port, "/rv/1")._2.contains("https://a.org/2"))
+        assert(get(srv.port, "/a/*")._2.contains("https://a.org/2"))
+        assert(get(srv.port, "/dv/2")._2.contains("https://a.org/2"))
+        // The new state's answers are kept in turn.
+        assert(jobsDuring { assert(get(srv.port, total)._2 === """[{"n":3}]""") } === 0)
+        // /rst is never kept.
+        assert(get(srv.port, "/rst") === ((200, "3")))
+      } finally srv.stop()
+    }
+
+    test(s"$kind: nondeterministic, time-dependent and other-store SQL is recomputed on every request") {
+      val store = open(s"${t}_nd")
+      store.append(docs("https://a.org/1" -> 1L))
+      val other = open(s"${t}_nd_other")
+      other.append(docs("https://b.org/1" -> 5L))
+      val srv = new StoreHttpServer(store).start()
+      try {
+        val rnd = s"/c/${enc(s"SELECT n, rand() AS r FROM ${t}_nd")}"
+        assert(get(srv.port, rnd)._2 !== get(srv.port, rnd)._2)
+        val now = s"/c/${enc(s"SELECT n, current_timestamp() AS ts FROM ${t}_nd")}"
+        val n1 = get(srv.port, now)._2
+        Thread.sleep(5)
+        assert(n1 !== get(srv.port, now)._2)
+        val oth = s"/c/${enc(s"SELECT SUM(n) AS n FROM ${t}_nd_other")}"
+        assert(get(srv.port, oth)._2 === """[{"n":5}]""")
+        // Another store's append does not move this server's store state.
+        other.append(docs("https://b.org/2" -> 6L))
+        assert(get(srv.port, oth)._2 === """[{"n":11}]""")
+        assert(srv.notKept("nondeterministic").get === 2L)
+        assert(srv.notKept("current_like").get === 2L)
+        assert(srv.notKept("relation").get === 2L)
+        assert(srv.keptHits.get === 0L)
+      } finally srv.stop()
+    }
+
+    test(s"$kind: a /c command runs every time and drops every kept body: DROP VIEW turns a kept SELECT into a 400") {
+      val store = open(s"${t}_cmd")
+      store.append(docs("https://a.org/1" -> 1L))
+      val srv = new StoreHttpServer(store).start()
+      try {
+        val q = s"/c/${enc(s"SELECT SUM(n) AS n FROM ${t}_cmd")}"
+        assert(get(srv.port, q) === ((200, """[{"n":1}]""")))
+        assert(get(srv.port, q) === ((200, """[{"n":1}]""")))
+        assert(srv.keptHits.get === 1L)
+        val set = s"/c/${enc("SET graft.kept.spec=1")}"
+        assert(get(srv.port, set)._1 === 200)
+        assert(get(srv.port, set)._1 === 200)
+        assert(srv.notKept("command").get === 2L)
+        assert(get(srv.port, s"/c/${enc(s"DROP VIEW ${t}_cmd")}")._1 === 200)
+        val (code, body) = get(srv.port, q)
+        assert(code === 400, body)
+        assert(srv.notKept("error").get === 1L)
+      } finally srv.stop()
+    }
+
+    test(s"$kind: under takedown a newly withdrawn URL is masked on the next request of a kept query") {
+      val store = open(s"${t}_td")
+      store.append(docs("https://a.org/1" -> 10L, "https://a.org/2" -> 20L))
+      val td = graft.store.Takedown.takedownStore(spark, tmpDir(), tableName = s"${t}_td_list")
+      val srv = new StoreHttpServer(store, takedown = Some((td, "doc_key"))).start()
+      try {
+        // The r15 alias case: SQL plans over the scrubbed view, so an
+        // alias over the key cannot smuggle a banned row out.
+        val sum = s"/c/${enc(s"SELECT SUM(n) AS total FROM ${t}_td")}"
+        val rows = Seq(s"/c/${enc(s"SELECT doc_key AS k, n FROM ${t}_td")}", "/a/*",
+          "/rv/5", s"/c/${enc("""{"n": ["lte", 0]}""")}/EOE")
+        assert(get(srv.port, sum) === ((200, """[{"total":30}]""")))
+        val before = rows.map(get(srv.port, _))
+        before.foreach { case (code, body) =>
+          assert(code === 200 && body.contains("https://a.org/1"), body)
+        }
+        assert(jobsDuring {
+          assert(rows.map(get(srv.port, _)) === before)
+          assert(get(srv.port, sum)._2 === """[{"total":30}]""")
+        } === 0)
+        val sparkSession = spark
+        import sparkSession.implicits._
+        graft.store.Takedown.request(td, Seq(("https://a.org/1", "dmca")).toDF("key", "reason"))
+        rows.map(get(srv.port, _)).foreach { case (code, body) =>
+          assert(code === 200 && !body.contains("https://a.org/1") &&
+            body.contains("https://a.org/2"), body)
+        }
+        assert(get(srv.port, sum) === ((200, """[{"total":20}]""")))
+      } finally srv.stop()
+    }
+  }
+
+  test("ParquetStore: a commit through a second handle changes the next answer") {
+    import graft.store.ParquetStore
+    val path = tmpDir()
+    val served = new ParquetStore(spark, keptSchema, path, "kept_second", cleanFreq = 1000L)
+    served.append(docs("https://a.org/1" -> 1L))
+    val srv = new StoreHttpServer(served).start()
+    try {
+      val reads = Seq("/a/*", s"/c/${enc("SELECT SUM(n) AS n FROM kept_second")}", "/dv/2")
+      val before = reads.map(get(srv.port, _))
+      assert(before === Seq((200, before.head._2), (200, """[{"n":1}]"""), (200, "[]")))
+      assert(jobsDuring { assert(reads.map(get(srv.port, _)) === before) } === 0)
+      // Same path and table name: the other handle's commit re-registers
+      // the view; the served handle's counter does not move.
+      val writer = new ParquetStore(spark, keptSchema, path, "kept_second", cleanFreq = 1000L)
+      writer.append(docs("https://a.org/2" -> 2L))
+      val after = reads.map(get(srv.port, _))
+      assert(after(0)._2.contains("https://a.org/2"))
+      assert(after(1) === ((200, """[{"n":3}]""")))
+      assert(after(2)._2.contains("https://a.org/2"))
+      assert(get(srv.port, "/rst") === ((200, "2")))
+    } finally srv.stop()
+  }
 }

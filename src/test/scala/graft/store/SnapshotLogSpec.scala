@@ -27,29 +27,6 @@ class SnapshotLogSpec extends SparkSpec {
   private def rows(s: ParquetStore) =
     s.selectAll.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
-  /** Spark jobs started while `body` runs, drained through a marker job
-    * (listener events arrive in order, after the call returns). */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("slog-probe", "probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("slog-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("slog-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("slog-marker"), "listener never saw the marker job")
-      groups.toArray.count(_ == "slog-probe")
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("relation build after a commit runs no Spark job at 40 generations") {
     val path = tmp()
     val writer = new ParquetStore(spark, schema, path, tableName = "slog_w",

@@ -117,6 +117,31 @@ class StoreSpec extends SparkSpec {
     assert(s.selectAll.queryExecution.optimizedPlan.collectLeaves().size === 1)
   }
 
+  test("a generation is in the view before the counter announces it") {
+    // The counter is what /rst serves: a reader that sees it must find
+    // the newest generation through the view, also while each append
+    // runs a localCheckpoint job and on the clean cadence.
+    val s = new RecentStore(spark, schema, "t_publish", cleanFreq = 5L,
+      materializeEvery = 1)
+    @volatile var done = false
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val unseen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val reader = new Thread(() => while (!done) {
+      val g = s.currentRstId - 1L
+      if (g >= 1L) {
+        if (spark.sql(s"SELECT COUNT(*) FROM t_publish WHERE rst_id = $g")
+          .head().getLong(0) == 0L) unseen.add(g)
+        reads.incrementAndGet()
+      }
+    })
+    reader.start()
+    try (1L to 20L).foreach(i => s.append(row(i, s"g$i")))
+    finally { done = true; reader.join() }
+    assert(reads.get > 0)
+    assert(unseen.isEmpty, s"announced before visible: $unseen")
+    assert(s.selectAll.count() === 20L)
+  }
+
   test("missing store column fails fast") {
     val sparkSession = spark
     import sparkSession.implicits._
