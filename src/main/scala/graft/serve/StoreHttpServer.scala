@@ -55,6 +55,16 @@ import graft.store.GenerationStore
   * every kept body. Only the newest state's bodies are held, all dropped
   * when it moves.
   *
+  * TRANSPORT: the server's sockets run with TCP_NODELAY on.
+  * `sendResponseHeaders` and the body write leave as two segments; under
+  * Nagle's algorithm a body smaller than one segment waits for the
+  * client's delayed ACK of the headers (~40 ms on Linux), a floor under
+  * every small answer (`/rst`, a kept hit). The switch is the JDK's
+  * `sun.net.httpserver.nodelay`, which is JVM-wide: it is read once,
+  * when the JVM's first `com.sun.net.httpserver` server starts. The
+  * companion sets it to `true` only when it is unset, so a deployer's
+  * explicit value wins.
+  *
   * Scale note: this veneer `collect()`s query RESULTS to the driver — by
   * design. It serves the same pre-aggregated bounded store the reference's
   * Flask process served (cardinality = keys × buckets × generations), never
@@ -148,7 +158,7 @@ final class StoreHttpServer(store: GenerationStore,
   private def isCommand(df: DataFrame): Boolean =
     df.queryExecution.commandExecuted.find(_.isInstanceOf[CommandResult]).isDefined
 
-  private val server = HttpServer.create(new InetSocketAddress(0), 0)
+  private val server = StoreHttpServer.newServer()
   server.createContext("/", handle _)
   // Small fixed pool: Spark actions are thread-safe, and the dispatcher
   // thread alone would serialize every request behind the slowest query.
@@ -572,4 +582,22 @@ final class StoreHttpServer(store: GenerationStore,
         s"no route for /${other.mkString("/")}")
     }
   }
+}
+
+object StoreHttpServer {
+  private[serve] val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** Turns TCP_NODELAY on for every `com.sun.net.httpserver` server of
+    * the JVM (class doc, TRANSPORT) unless the property is already set.
+    * The JDK reads it once per JVM, when the first such server starts,
+    * so it is JVM-wide, and an app that created one earlier keeps its
+    * own setting. It runs as this object initializes, before the first
+    * [[newServer]]; nothing else in `src/main` creates such a server
+    * (`git grep HttpServer.create`). */
+  private[serve] def defaultNoDelay(): Unit =
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+
+  defaultNoDelay()
+
+  private def newServer(): HttpServer = HttpServer.create(new InetSocketAddress(0), 0)
 }

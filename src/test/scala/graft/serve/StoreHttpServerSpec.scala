@@ -821,6 +821,50 @@ class StoreHttpServerSpec extends SparkSpec {
         assert(get(srv.port, sum) === ((200, """[{"total":20}]""")))
       } finally srv.stop()
     }
+
+    test(s"$kind: small answers are not held back by delayed ACK") {
+      val store = open(s"${t}_ack")
+      store.append(docs("https://a.org/1" -> 1L))
+      val srv = new StoreHttpServer(store).start()
+      // One client, requests one after another: every request rides the
+      // same keep-alive connection.
+      val one = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      def medianMs(path: String, expected: String): Double = {
+        val ms = (1 to 30).map { _ =>
+          val t0 = System.nanoTime()
+          val resp = one.send(
+            HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}$path")).GET().build(),
+            HttpResponse.BodyHandlers.ofString())
+          val took = (System.nanoTime() - t0) / 1e6
+          assert((resp.statusCode(), resp.body()) === ((200, expected)))
+          took
+        }.sorted
+        ms(ms.size / 2)
+      }
+      try {
+        val total = s"/c/${enc(s"SELECT SUM(n) AS n FROM ${t}_ack")}"
+        assert(get(srv.port, total) === ((200, """[{"n":1}]""")))
+        val hits = srv.keptHits.get
+        // With Nagle on, each answer waits ~40 ms for the client's
+        // delayed ACK of the headers.
+        val rst = medianMs("/rst", store.currentRstId.toString)
+        val kept = medianMs(total, """[{"n":1}]""")
+        assert(srv.keptHits.get - hits === 30L)
+        assert(rst < 10.0 && kept < 10.0, s"median /rst $rst ms, kept /c $kept ms")
+      } finally srv.stop()
+      // A value set before a server is built is the deployer's and stays.
+      val key = StoreHttpServer.NoDelay
+      val was = System.getProperty(key)
+      try {
+        System.setProperty(key, "false")
+        new StoreHttpServer(store).start().stop()
+        StoreHttpServer.defaultNoDelay()
+        assert(System.getProperty(key) === "false")
+        System.clearProperty(key)
+        StoreHttpServer.defaultNoDelay()
+        assert(System.getProperty(key) === "true")
+      } finally if (was == null) System.clearProperty(key) else System.setProperty(key, was)
+    }
   }
 
   test("ParquetStore: a commit through a second handle changes the next answer") {

@@ -9,7 +9,9 @@ median and quartiles, the pairs (same workload and seed) the change won and
 lost, whether the medians differ by more than the parent's interquartile
 range, and whether the change's median is worse than the parent's by more
 than the metric's bound. `ops_failed_ratio` (failed / attempted) must not
-rise at all.
+rise at all. Each side's median `attempted` (operations per run) is printed
+per workload: a shift in request volume moves the benchmark's own records,
+and so `heap_live_mb`.
 
     python3 tools/ab_summary.py <results-dir> [--benchmark BENCHMARK.json] [--json]
 
@@ -49,6 +51,7 @@ def load(results_dir):
         value = {k: v["value"] for k, v in run.get("metrics", {}).items()}
         if run.get("attempted"):
             value["ops_failed_ratio"] = run["failed"] / run["attempted"]
+        value["_attempted"] = run.get("attempted", 0)
         value["_correct"] = bool(run.get("correct"))
         runs.setdefault(workload, {}).setdefault(seed, {})[side] = value
     return runs
@@ -84,6 +87,17 @@ def summarize(runs, declared):
     return rows
 
 
+def attempted(runs):
+    """{workload: {side: median operations per run}}"""
+    out = {}
+    for workload, seeds in sorted(runs.items()):
+        for side in ("parent", "change"):
+            xs = [r[side]["_attempted"] for r in seeds.values() if side in r]
+            if xs:
+                out.setdefault(workload, {})[side] = statistics.median(xs)
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("results_dir")
@@ -96,22 +110,29 @@ def main():
     declared = declared + [{"name": "ops_failed_ratio", "better": "lower", "bound": 0}]
     runs = load(a.results_dir)
     rows = summarize(runs, declared)
+    ops = attempted(runs)
     incorrect = sorted(f"{side}-{w}-{s}" for w, seeds in runs.items()
                        for s, r in seeds.items() for side, v in r.items() if not v["_correct"])
     if a.json:
-        print(json.dumps({"rows": rows, "incorrect_runs": incorrect}, indent=1))
+        print(json.dumps({"rows": rows, "attempted": ops, "incorrect_runs": incorrect},
+                         indent=1))
     else:
         print(f"{'workload':15} {'metric':21} {'parent q1/med/q3':>28} "
               f"{'change q1/med/q3':>28} {'won':>4}/{'pairs':<5} verdict")
-        for r in rows:
-            def fmt(s):
-                return f"{s['q1']:.4g}/{s['median']:.4g}/{s['q3']:.4g}"
-            verdict = ("REGRESSED" if r["regressed"] else
-                       "gain" if r["gain"] and r["won"] >= 0.9 * r["pairs"] else
-                       "better, beyond IQR" if r["gain"] else
-                       "worse, beyond IQR" if r["beyond_parent_iqr"] else "within IQR")
-            print(f"{r['workload']:15} {r['metric']:21} {fmt(r['parent']):>28} "
-                  f"{fmt(r['change']):>28} {r['won']:>4}/{r['pairs']:<5} {verdict}")
+        def fmt(s):
+            return f"{s['q1']:.4g}/{s['median']:.4g}/{s['q3']:.4g}"
+        for w, sides in ops.items():
+            for r in rows:
+                if r["workload"] != w:
+                    continue
+                verdict = ("REGRESSED" if r["regressed"] else
+                           "gain" if r["gain"] and r["won"] >= 0.9 * r["pairs"] else
+                           "better, beyond IQR" if r["gain"] else
+                           "worse, beyond IQR" if r["beyond_parent_iqr"] else "within IQR")
+                print(f"{w:15} {r['metric']:21} {fmt(r['parent']):>28} "
+                      f"{fmt(r['change']):>28} {r['won']:>4}/{r['pairs']:<5} {verdict}")
+            print(f"{w:15} {'attempted (median)':21} {sides.get('parent', '-'):>28} "
+                  f"{sides.get('change', '-'):>28}")
         if incorrect:
             print("runs failing the correctness gate:", ", ".join(incorrect))
     sys.exit(1 if incorrect or any(r["regressed"] for r in rows) else 0)
