@@ -4,8 +4,11 @@ import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, LocalRelation, LogicalPlan, OneRowRelation}
+import org.apache.spark.sql.{DataFrame, Row, classic}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.CallMethodViaReflection
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, OneRowRelation, View}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.functions._
 import graft.store.GenerationStore
@@ -23,7 +26,8 @@ import graft.store.GenerationStore
   *     (`http_endpoint.py:70-77`)
   *   - `GET /c/<json>/EOE`       — Q7 per-column comparator select
   *     (`http_endpoint.py:202-212`)
-  *   - `GET /c/<sql>`            — Q2 arbitrary SQL (`http_endpoint.py:88-92`)
+  *   - `GET /c/<sql>`            — Q2 any read-only query
+  *     (`http_endpoint.py:88-92`; see READ-ONLY SQL)
   *   - `GET /cs/<sql>`           — Q3 SQL→Avro when a schema is set, else
   *     plain JSON rows (`http_endpoint.py:78-86`)
   *   - `GET /r`                  — Q4 reconnect/reset (`http_endpoint.py:94-98`)
@@ -42,18 +46,25 @@ import graft.store.GenerationStore
   * store state); a repeat serves the kept bytes with no parse, plan or
   * Spark job. The store state is read before anything binds: the frame
   * `store.selectAll` returns (one object per committed state in both
-  * deployments), the counter, the victim store's frame under takedown,
-  * and how many commands `/c` has run. Frames compare by REFERENCE — a
-  * file index compares equal across snapshots. A body is kept only when
-  * the response is a 200 and its analyzed plan reads the store through
-  * that very frame, otherwise only literal relations (plus the victim
-  * store under takedown), with every expression deterministic and none
-  * time-dependent (`current_timestamp`, …); an answer computed against a
-  * view the store has not re-registered yet is served, not kept. `/rst`,
-  * `/r`, `/x`, `/cdx` and `/replay` are never kept. A `/c` command (`SET`,
-  * `CREATE`/`DROP VIEW`, …) runs every time and moves the state, dropping
-  * every kept body. Only the newest state's bodies are held, all dropped
-  * when it moves.
+  * deployments), the counter, and the victim store's frame under
+  * takedown. Frames compare by REFERENCE — a file index compares equal
+  * across snapshots. A body is kept only when the response is a 200 and
+  * its analyzed plan reads the store through that very frame, otherwise
+  * only literal relations (plus the victim store under takedown), with
+  * every expression deterministic and none time-dependent
+  * (`current_timestamp`, …); an answer computed against a view the store
+  * has not re-registered yet is served, not kept. `/rst`, `/r`, `/x`,
+  * `/cdx` and `/replay` are never kept. No route runs a command (see
+  * READ-ONLY SQL), so only an append moves the state. Only the newest
+  * state's bodies are held, all dropped when it moves.
+  *
+  * READ-ONLY SQL: `/c`, `/cs` and `/a/<table>` take one query. The text
+  * (trailing `;` dropped) is parsed with the grammar's `query` rule
+  * before anything runs; a command (`SET`, `DROP VIEW`, `CACHE TABLE`,
+  * `INSERT`, `EXPLAIN`, `EXECUTE IMMEDIATE`, a second statement, …) is
+  * a 400 that says so, and the session is left as it was. A plan that
+  * calls a JVM method by reflection (`reflect`, `java_method`,
+  * `try_reflect`), subqueries included, is a 400 before any job.
   *
   * TRANSPORT: the server's sockets run with TCP_NODELAY on.
   * `sendResponseHeaders` and the body write leave as two segments; under
@@ -77,12 +88,14 @@ import graft.store.GenerationStore
   * TAKEDOWN SCRUB-AT-READ (r14 verdict #2): when a `takedown` pair
   * (victim store, key column) is given, a logical takedown is
   * effective at the HTTP boundary the moment its request lands, while
-  * physical erasure is still pending. Two layers: SQL routes execute
-  * against a SCRUBBED registration of the store's own view
-  * ([[sqlView]] — so aliases and expressions over the key cannot
-  * smuggle a banned row out, review r15), and every served frame that
-  * still carries the key column is anti-joined again before it
-  * serializes ([[graft.store.Takedown.scrub]]'s read-path contract).
+  * physical erasure is still pending. Two layers: in a SQL route's
+  * plan every read of the store's own view is wrapped in the scrub's
+  * anti-join ([[scrubInPlan]] — so aliases, expressions, joins and
+  * subqueries over the key cannot smuggle a banned row out, review
+  * r15); the session, its views and the store are not touched and no
+  * lock is taken. And every served frame that still carries the key
+  * column is anti-joined again before it serializes
+  * ([[graft.store.Takedown.scrub]]'s read-path contract).
   * Residue: SQL over OTHER attached tables (not this store's view)
   * gets only the name-based net — it ends at the next [[graft.store
   * .Takedown.erase]] cadence, the documented division of labor. */
@@ -118,45 +131,45 @@ final class StoreHttpServer(store: GenerationStore,
     case _ => df
   }
 
-  /** Arbitrary SQL under takedown: re-register the store's own view as
-    * its SCRUBBED form before executing, so the query PLANS over the
-    * gated rows — a post-hoc result scrub would be name-based and an
-    * alias (`SELECT doc_key AS k …`) or an expression over the key
-    * would smuggle a banned row past it (review r15). Re-registered
-    * per request because the scrub plan freezes the victim store's
-    * snapshot at construction, and because the store's own
-    * appends re-register the raw view. Tables OTHER than this store's
-    * (attached catalogs) are not ours to scrub — results still pass
-    * through the name-based [[scrubbed]] net in [[rowsJson]]. */
+  /** One read-only query for `/c`, `/cs` and `/a/<table>` (class doc,
+    * READ-ONLY SQL). The gate acts on the TEXT: `spark.sql` runs a
+    * command eagerly, and an analyzed plan is too late (the analyzer
+    * runs an `EXECUTE IMMEDIATE`'s statement). Without takedown the
+    * frame is `store.sql`'s own, so its answer stays keepable. */
   private def sqlView(query: String): DataFrame = {
-    val df = if (takedown.isEmpty) store.sql(query)
-    else store.synchronized {
-      // The swap window is serialized ON THE STORE'S OWN MONITOR
-      // (review r15 #2): both store deployments guard every mutator —
-      // including the registerView a concurrent append runs — with
-      // this.synchronized, and the server's 4-thread pool runs SQL
-      // routes concurrently; without the lock, request A's
-      // finally-restore could re-expose the raw view to request B
-      // between B's registration and its analysis, reopening the alias
-      // leak. spark.sql analyzes EAGERLY, so the plan is bound to the
-      // scrubbed relation before the lock releases; only execution
-      // (the collect) runs outside it.
-      scrubbed(store.selectAll).createOrReplaceTempView(store.tableName)
-      try store.sql(query)
-      finally {
-        // Restore the raw view: the server must not change what
-        // non-HTTP readers of the session see.
-        store.selectAll.createOrReplaceTempView(store.tableName)
-      }
+    val text = query.replaceAll("[\\s;]+$", "")
+    try store.spark.sessionState.sqlParser.parseQuery(text)
+    catch { case e: ParseException =>
+      throw new IllegalArgumentException(s"only read-only queries are served: ${e.getMessage}")
     }
-    // spark.sql ran a command eagerly: it may have changed what any
-    // kept answer read, so it moves the store state.
-    if (isCommand(df)) commands.incrementAndGet()
-    df
+    val df = store.sql(text)
+    val plan = df.queryExecution.analyzed
+    if (plan.collectFirstWithSubqueries {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[CallMethodViaReflection])) => p
+    }.isDefined) throw new IllegalArgumentException(
+      "reflect, java_method and try_reflect are not served")
+    takedown.fold(df)(scrubInPlan(plan, _))
   }
 
-  private def isCommand(df: DataFrame): Boolean =
-    df.queryExecution.commandExecuted.find(_.isInstanceOf[CommandResult]).isDefined
+  /** `plan` with every read of the store's own temp view, subqueries
+    * included, wrapped in [[graft.store.Takedown.scrub]]'s anti-join
+    * (class doc, TAKEDOWN). It wraps whatever the view resolved to for
+    * this request, so an append racing it cannot slip a generation past
+    * the scrub. Tables OTHER than this store's (attached catalogs) are
+    * not ours to scrub: their results still pass the name-based
+    * [[scrubbed]] net in [[rowsJson]]. */
+  private def scrubInPlan(plan: LogicalPlan, td: (graft.store.ParquetStore, String)): DataFrame = {
+    val (victims, key) = td
+    val resolver = store.spark.sessionState.conf.resolver
+    ofPlan(plan.transformUpWithSubqueries {
+      case v: View if v.isTempView && resolver(v.desc.identifier.table, store.tableName) &&
+          v.output.exists(a => resolver(a.name, key)) =>
+        graft.store.Takedown.scrub(ofPlan(v), victims, key).queryExecution.analyzed
+    })
+  }
+
+  private def ofPlan(plan: LogicalPlan): DataFrame = new classic.Dataset[Row](
+    store.spark.asInstanceOf[classic.SparkSession], plan, ExpressionEncoder(plan.schema))
 
   private val server = StoreHttpServer.newServer()
   server.createContext("/", handle _)
@@ -324,16 +337,13 @@ final class StoreHttpServer(store: GenerationStore,
   /** The store state every read route's answer depends on. The frames
     * compare by reference: each is one object per committed state. */
   private final class StoreState(val rst: Long, val frame: DataFrame,
-                                 val victims: Option[DataFrame], val commands: Long) {
+                                 val victims: Option[DataFrame]) {
     def same(o: StoreState): Boolean = rst == o.rst && (frame eq o.frame) &&
-      victims.zip(o.victims).forall(v => v._1 eq v._2) && commands == o.commands
+      victims.zip(o.victims).forall(v => v._1 eq v._2)
   }
 
-  /** Commands `/c` has run (see [[sqlView]]); part of the store state. */
-  private val commands = new AtomicLong
-
   private def storeState(): StoreState = new StoreState(store.currentRstId,
-    store.selectAll, takedown.map(_._1.selectAll), commands.get)
+    store.selectAll, takedown.map(_._1.selectAll))
 
   /** The routes whose bodies may be kept (`/x` runs arbitrary closures). */
   private val Keepable = Set("a", "c", "cs", "rv", "dv", "sr")
@@ -357,7 +367,7 @@ final class StoreHttpServer(store: GenerationStore,
   private[serve] val keptHits = new AtomicLong
   private[serve] val keptMisses = new AtomicLong
   private[serve] val notKept: Map[String, AtomicLong] =
-    Seq("error", "command", "relation", "nondeterministic", "current_like",
+    Seq("error", "relation", "nondeterministic", "current_like",
       "moved", "cap").map(_ -> new AtomicLong).toMap
 
   /** A JSON route's body: kept, or computed and kept when the rules of
@@ -410,11 +420,10 @@ final class StoreHttpServer(store: GenerationStore,
     }
 
   /** Why the answer serialized from `frame` must not be kept for `at`,
-    * or None: a command; a relation other than `at`'s frames (by
-    * reference) or a literal; a nondeterministic or time-dependent
-    * expression. Subqueries included. */
+    * or None: a relation other than `at`'s frames (by reference) or a
+    * literal; a nondeterministic or time-dependent expression.
+    * Subqueries included. */
   private def whyNotKept(frame: DataFrame, at: StoreState): Option[String] = {
-    if (isCommand(frame)) return Some("command")
     val ours = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean])
     (at.frame +: at.victims.toSeq).foreach(

@@ -43,6 +43,23 @@ class StoreHttpServerSpec extends SparkSpec {
   private def enc(s: String): String =
     URLEncoder.encode(s, UTF_8).replace("+", "%20")
 
+  /** Queries that read the doc keys of table `t` once: through a scalar
+    * subquery, an IN subquery, and `view`, a temp view over `t` made
+    * outside the server. Before a takedown of https://a.org/1 each
+    * answer shows it; after, only https://a.org/2. */
+  private def readOnce(t: String, view: String): Seq[String] = Seq(
+    s"SELECT (SELECT min(doc_key) FROM $t) AS k",
+    s"SELECT k FROM VALUES ('https://a.org/1'), ('https://a.org/2') AS x(k) " +
+      s"WHERE k IN (SELECT doc_key FROM $t)",
+    s"SELECT doc_key AS k FROM $view")
+
+  /** As [[readOnce]], through a self-join and a CTE read twice. Such an
+    * answer is never kept: the analyzer gives the second read of the
+    * view fresh ids, so its leaf is not the store's frame. */
+  private def readTwice(t: String): Seq[String] = Seq(
+    s"SELECT a.doc_key AS k, b.n FROM $t a JOIN $t b ON a.n = b.n",
+    s"WITH c AS (SELECT doc_key AS k, n FROM $t) SELECT x.k, y.n FROM c x JOIN c y ON x.k = y.k")
+
   test("every reference route round-trips the README worked example") {
     val sparkSession = spark
     import sparkSession.implicits._
@@ -274,7 +291,7 @@ class StoreHttpServerSpec extends SparkSpec {
         s"/c/${enc("SELECT doc_key, n FROM http_td_docs")}")
       assert(!sql.contains("https://a.org/1") && sql.contains("https://a.org/2"))
       // An ALIAS over the key (or an expression) cannot smuggle the row
-      // out: SQL plans over the scrubbed view, not a name-matched
+      // out: SQL plans over the scrubbed rows, not a name-matched
       // result (review r15).
       val (_, aliased) = get(srv.port,
         s"/c/${enc("SELECT doc_key AS k, n FROM http_td_docs")}")
@@ -285,11 +302,19 @@ class StoreHttpServerSpec extends SparkSpec {
       assert(!exprd.toLowerCase.contains("https://a.org/1") &&
         exprd.toLowerCase.contains("https://a.org/2"))
       // Aggregates over the store's own view also compute over the
-      // scrubbed rows (the SQL plans against the gated registration) —
-      // the banned row's n=10 is excluded.
+      // scrubbed rows — the banned row's n=10 is excluded.
       val (_, agg) = get(srv.port,
         s"/c/${enc("SELECT sum(n) AS total FROM http_td_docs")}")
       assert(agg === """[{"total":20}]""")
+      // Self-joins, subqueries, CTEs and a view over the store's view
+      // read the scrubbed rows too: the wrap sits on every read of the
+      // view in the plan.
+      spark.sql("CREATE TEMP VIEW http_td_docs_v AS SELECT * FROM http_td_docs")
+      (readOnce("http_td_docs", "http_td_docs_v") ++ readTwice("http_td_docs")).foreach { q =>
+        val (code, body) = get(srv.port, s"/c/${enc(q)}")
+        assert(code === 200 && !body.contains("https://a.org/1") &&
+          body.contains("https://a.org/2"), s"$q: $body")
+      }
     } finally srv.stop()
   }
 
@@ -771,24 +796,49 @@ class StoreHttpServerSpec extends SparkSpec {
       } finally srv.stop()
     }
 
-    test(s"$kind: a /c command runs every time and drops every kept body: DROP VIEW turns a kept SELECT into a 400") {
+    test(s"$kind: /c serves read-only queries only: commands and reflection are refused and change nothing") {
       val store = open(s"${t}_cmd")
       store.append(docs("https://a.org/1" -> 1L))
-      val srv = new StoreHttpServer(store).start()
+      val srv = new StoreHttpServer(store, avroSchema = Some(
+        """{"type": "record", "name": "N", "fields": [{"name": "n", "type": ["long", "null"]}]}""")).start()
+      val conf = "graft.kept.spec"
+      val prop = s"graft.reflect.${t}"
       try {
         val q = s"/c/${enc(s"SELECT SUM(n) AS n FROM ${t}_cmd")}"
         assert(get(srv.port, q) === ((200, """[{"n":1}]""")))
-        assert(get(srv.port, q) === ((200, """[{"n":1}]""")))
-        assert(srv.keptHits.get === 1L)
-        val set = s"/c/${enc("SET graft.kept.spec=1")}"
-        assert(get(srv.port, set)._1 === 200)
-        assert(get(srv.port, set)._1 === 200)
-        assert(srv.notKept("command").get === 2L)
-        assert(get(srv.port, s"/c/${enc(s"DROP VIEW ${t}_cmd")}")._1 === 200)
-        val (code, body) = get(srv.port, q)
+        // A trailing ';' is not part of the query.
+        assert(get(srv.port, s"/c/${enc(s"SELECT SUM(n) AS n FROM ${t}_cmd ; ")}") ===
+          ((200, """[{"n":1}]""")))
+        val commands = Seq(s"SET $conf=1", s"RESET $conf", s"DROP VIEW ${t}_cmd",
+          s"CREATE OR REPLACE TEMP VIEW ${t}_cmd AS SELECT 1 AS n", s"CACHE TABLE ${t}_cmd",
+          s"INSERT INTO ${t}_cmd VALUES ('https://a.org/9', 9, 9)", s"EXPLAIN SELECT n FROM ${t}_cmd",
+          "CALL system.noop()", s"EXECUTE IMMEDIATE 'DROP VIEW ${t}_cmd'",
+          s"SELECT 1; DROP VIEW ${t}_cmd")
+        val refused = commands.map(c => s"/c/${enc(c)}") :+ s"/cs/${enc(s"DROP VIEW ${t}_cmd")}"
+        refused.foreach { path =>
+          val (code, body) = get(srv.port, path)
+          assert(code === 400 && body.contains("only read-only queries are served"), s"$path: $body")
+        }
+        // JVM methods by reflection, in the select list or a subquery.
+        val reflective = Seq(
+          s"SELECT reflect('java.lang.System', 'setProperty', '$prop', '1') AS r",
+          s"SELECT n FROM ${t}_cmd WHERE n IN (SELECT java_method('java.lang.System', " +
+            s"'setProperty', '$prop', '1') AS r)",
+          s"SELECT try_reflect('java.lang.System', 'setProperty', '$prop', '1') AS r FROM ${t}_cmd")
+        reflective.foreach { sql =>
+          val (code, body) = get(srv.port, s"/c/${enc(sql)}")
+          assert(code === 400 && body.contains("reflect"), s"$sql: $body")
+        }
+        assert(System.getProperty(prop) === null)
+        assert(spark.conf.getOption(conf) === None)
+        assert(spark.catalog.tableExists(s"${t}_cmd"))
+        assert(!spark.catalog.isCached(s"${t}_cmd"))
+        assert(jobsDuring { assert(get(srv.port, q) === ((200, """[{"n":1}]"""))) } === 0)
+        assert(srv.notKept("error").get === (refused.size + reflective.size).toLong)
+        val (code, body) = get(srv.port, s"/c/${enc(s"SELECT nope FROM ${t}_cmd")}")
         assert(code === 400, body)
-        assert(srv.notKept("error").get === 1L)
-      } finally srv.stop()
+        assert(srv.notKept("error").get === (refused.size + reflective.size + 1).toLong)
+      } finally { srv.stop(); System.clearProperty(prop) }
     }
 
     test(s"$kind: under takedown a newly withdrawn URL is masked on the next request of a kept query") {
@@ -797,18 +847,20 @@ class StoreHttpServerSpec extends SparkSpec {
       val td = graft.store.Takedown.takedownStore(spark, tmpDir(), tableName = s"${t}_td_list")
       val srv = new StoreHttpServer(store, takedown = Some((td, "doc_key"))).start()
       try {
-        // The r15 alias case: SQL plans over the scrubbed view, so an
+        // The r15 alias case: SQL plans over the scrubbed rows, so an
         // alias over the key cannot smuggle a banned row out.
         val sum = s"/c/${enc(s"SELECT SUM(n) AS total FROM ${t}_td")}"
-        val rows = Seq(s"/c/${enc(s"SELECT doc_key AS k, n FROM ${t}_td")}", "/a/*",
-          "/rv/5", s"/c/${enc("""{"n": ["lte", 0]}""")}/EOE")
+        spark.sql(s"CREATE TEMP VIEW ${t}_td_v AS SELECT * FROM ${t}_td")
+        val kept = (s"SELECT doc_key AS k, n FROM ${t}_td" +: readOnce(s"${t}_td", s"${t}_td_v"))
+          .map(q => s"/c/${enc(q)}") ++ Seq("/a/*", "/rv/5", s"/c/${enc("""{"n": ["lte", 0]}""")}/EOE")
+        val rows = kept ++ readTwice(s"${t}_td").map(q => s"/c/${enc(q)}")
         assert(get(srv.port, sum) === ((200, """[{"total":30}]""")))
-        val before = rows.map(get(srv.port, _))
-        before.foreach { case (code, body) =>
+        rows.map(get(srv.port, _)).foreach { case (code, body) =>
           assert(code === 200 && body.contains("https://a.org/1"), body)
         }
+        val before = kept.map(get(srv.port, _))
         assert(jobsDuring {
-          assert(rows.map(get(srv.port, _)) === before)
+          assert(kept.map(get(srv.port, _)) === before)
           assert(get(srv.port, sum)._2 === """[{"total":30}]""")
         } === 0)
         val sparkSession = spark
@@ -819,6 +871,22 @@ class StoreHttpServerSpec extends SparkSpec {
             body.contains("https://a.org/2"), body)
         }
         assert(get(srv.port, sum) === ((200, """[{"total":20}]""")))
+        // No store lock: a takedown SQL request answers while another
+        // thread holds the store's monitor, as an append does.
+        import java.util.concurrent.{CountDownLatch, TimeUnit}
+        val held, answered = new CountDownLatch(1)
+        val inTime = new java.util.concurrent.atomic.AtomicBoolean
+        val holder = new Thread(() => store.synchronized {
+          held.countDown()
+          inTime.set(answered.await(30, TimeUnit.SECONDS))
+        })
+        holder.start()
+        held.await()
+        val whileHeld = get(srv.port, s"/c/${enc(s"SELECT n FROM ${t}_td ORDER BY n")}")
+        answered.countDown()
+        holder.join()
+        assert(inTime.get, "the request waited for the store's monitor")
+        assert(whileHeld === ((200, """[{"n":20}]""")))
       } finally srv.stop()
     }
 

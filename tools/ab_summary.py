@@ -11,7 +11,9 @@ range, and whether the change's median is worse than the parent's by more
 than the metric's bound. `ops_failed_ratio` (failed / attempted) must not
 rise at all. Each side's median `attempted` (operations per run) is printed
 per workload: a shift in request volume moves the benchmark's own records,
-and so `heap_live_mb`.
+and so `heap_live_mb`. When a result file also holds the line before the
+last (`tail -2`), each side's median of every route's `route_p50_ms` is
+printed per workload too.
 
     python3 tools/ab_summary.py <results-dir> [--benchmark BENCHMARK.json] [--json]
 
@@ -47,8 +49,10 @@ def load(results_dir):
             text = f.read().strip()
         if not text:
             continue
-        run = json.loads(text.splitlines()[-1])
+        lines = text.splitlines()
+        run = json.loads(lines[-1])
         value = {k: v["value"] for k, v in run.get("metrics", {}).items()}
+        value["_routes"] = json.loads(lines[-2]).get("route_p50_ms", {}) if len(lines) > 1 else {}
         if run.get("attempted"):
             value["ops_failed_ratio"] = run["failed"] / run["attempted"]
         value["_attempted"] = run.get("attempted", 0)
@@ -98,6 +102,20 @@ def attempted(runs):
     return out
 
 
+def route_p50(runs):
+    """{workload: {route: {side: median of the runs' route_p50_ms}}}"""
+    out = {}
+    for workload, seeds in sorted(runs.items()):
+        for side in ("parent", "change"):
+            per_route = {}
+            for r in seeds.values():
+                for route, ms in r.get(side, {}).get("_routes", {}).items():
+                    per_route.setdefault(route, []).append(ms)
+            for route, xs in sorted(per_route.items()):
+                out.setdefault(workload, {}).setdefault(route, {})[side] = statistics.median(xs)
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("results_dir")
@@ -111,11 +129,12 @@ def main():
     runs = load(a.results_dir)
     rows = summarize(runs, declared)
     ops = attempted(runs)
+    routes = route_p50(runs)
     incorrect = sorted(f"{side}-{w}-{s}" for w, seeds in runs.items()
                        for s, r in seeds.items() for side, v in r.items() if not v["_correct"])
     if a.json:
-        print(json.dumps({"rows": rows, "attempted": ops, "incorrect_runs": incorrect},
-                         indent=1))
+        print(json.dumps({"rows": rows, "attempted": ops, "route_p50_ms": routes,
+                          "incorrect_runs": incorrect}, indent=1))
     else:
         print(f"{'workload':15} {'metric':21} {'parent q1/med/q3':>28} "
               f"{'change q1/med/q3':>28} {'won':>4}/{'pairs':<5} verdict")
@@ -133,6 +152,9 @@ def main():
                       f"{fmt(r['change']):>28} {r['won']:>4}/{r['pairs']:<5} {verdict}")
             print(f"{w:15} {'attempted (median)':21} {sides.get('parent', '-'):>28} "
                   f"{sides.get('change', '-'):>28}")
+            for route, by_side in routes.get(w, {}).items():
+                p50 = {s: f"{by_side[s]:.4g}" if s in by_side else "-" for s in ("parent", "change")}
+                print(f"{w:15} {route + ' p50 ms':21} {p50['parent']:>28} {p50['change']:>28}")
         if incorrect:
             print("runs failing the correctness gate:", ", ".join(incorrect))
     sys.exit(1 if incorrect or any(r["regressed"] for r in rows) else 0)
