@@ -8,8 +8,11 @@ import org.apache.spark.sql.{DataFrame, Row, classic}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.CallMethodViaReflection
 import org.apache.spark.sql.catalyst.parser.ParseException
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, OneRowRelation, View}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, OneRowRelation,
+  ScriptTransformation, View}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 import org.apache.spark.sql.functions._
 import graft.store.GenerationStore
 
@@ -62,9 +65,15 @@ import graft.store.GenerationStore
   * (trailing `;` dropped) is parsed with the grammar's `query` rule
   * before anything runs; a command (`SET`, `DROP VIEW`, `CACHE TABLE`,
   * `INSERT`, `EXPLAIN`, `EXECUTE IMMEDIATE`, a second statement, …) is
-  * a 400 that says so, and the session is left as it was. A plan that
-  * calls a JVM method by reflection (`reflect`, `java_method`,
-  * `try_reflect`), subqueries included, is a 400 before any job.
+  * a 400 that says so, and the session is left as it was. The query
+  * rule still holds three ways out of the store, each a 400 before any
+  * job of the answer, subqueries and views included: a call of a JVM
+  * method by reflection (`reflect`, `java_method`, `try_reflect`), a
+  * `TRANSFORM(…) USING '<command>'` (a shell command on this host), and
+  * outside a view, a read of files named by path (`text.`<file>``,
+  * `parquet.`<store dir>`` — Spark's `runSQLOnFiles`). A path read
+  * is refused after analysis, and the analyzer lists the path and may
+  * read it to infer a schema; its rows are never served.
   *
   * TRANSPORT: the server's sockets run with TCP_NODELAY on.
   * `sendResponseHeaders` and the body write leave as two segments; under
@@ -137,18 +146,31 @@ final class StoreHttpServer(store: GenerationStore,
     * runs an `EXECUTE IMMEDIATE`'s statement). Without takedown the
     * frame is `store.sql`'s own, so its answer stays keepable. */
   private def sqlView(query: String): DataFrame = {
-    val text = query.replaceAll("[\\s;]+$", "")
+    val text = query.take(query.lastIndexWhere(c => c != ';' && !c.isWhitespace) + 1)
     try store.spark.sessionState.sqlParser.parseQuery(text)
     catch { case e: ParseException =>
       throw new IllegalArgumentException(s"only read-only queries are served: ${e.getMessage}")
     }
     val df = store.sql(text)
     val plan = df.queryExecution.analyzed
-    if (plan.collectFirstWithSubqueries {
-      case p if p.expressions.exists(_.exists(_.isInstanceOf[CallMethodViaReflection])) => p
-    }.isDefined) throw new IllegalArgumentException(
-      "reflect, java_method and try_reflect are not served")
+    plan.collectFirstWithSubqueries {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[CallMethodViaReflection])) =>
+        "reflect, java_method and try_reflect are not served"
+      case _: ScriptTransformation => "TRANSFORM scripts are not served"
+    }.orElse(Option.when(readsByPath(plan))("files are not served by path"))
+      .foreach(why => throw new IllegalArgumentException(why))
     takedown.fold(df)(scrubInPlan(plan, _))
+  }
+
+  /** Whether `plan` reads files named by path (`parquet.`<dir>``, also
+    * through `IDENTIFIER(…)`) outside a view: the session's views are its
+    * owner's, a path in the query text is the client's (class doc,
+    * READ-ONLY SQL). */
+  private def readsByPath(plan: LogicalPlan): Boolean = plan match {
+    case _: View => false
+    case r: LogicalRelation => r.catalogTable.isEmpty
+    case r: DataSourceV2Relation => r.table.isInstanceOf[FileTable]
+    case p => p.children.exists(readsByPath) || p.subqueries.exists(readsByPath)
   }
 
   /** `plan` with every read of the store's own temp view, subqueries

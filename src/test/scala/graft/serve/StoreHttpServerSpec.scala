@@ -819,25 +819,40 @@ class StoreHttpServerSpec extends SparkSpec {
           val (code, body) = get(srv.port, path)
           assert(code === 400 && body.contains("only read-only queries are served"), s"$path: $body")
         }
-        // JVM methods by reflection, in the select list or a subquery.
+        // Queries that reach past the store: JVM methods by reflection, a
+        // TRANSFORM script, files read by path (the store's own too); in
+        // the select list, a subquery or an IDENTIFIER.
+        val dir = tmpDir()
+        val touched = new java.io.File(dir, "touched")
+        val file = java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(dir, "f.txt"), "secret\n").toUri
         val reflective = Seq(
-          s"SELECT reflect('java.lang.System', 'setProperty', '$prop', '1') AS r",
+          s"SELECT reflect('java.lang.System', 'setProperty', '$prop', '1') AS r" -> "reflect",
           s"SELECT n FROM ${t}_cmd WHERE n IN (SELECT java_method('java.lang.System', " +
-            s"'setProperty', '$prop', '1') AS r)",
-          s"SELECT try_reflect('java.lang.System', 'setProperty', '$prop', '1') AS r FROM ${t}_cmd")
-        reflective.foreach { sql =>
+            s"'setProperty', '$prop', '1') AS r)" -> "reflect",
+          s"SELECT try_reflect('java.lang.System', 'setProperty', '$prop', '1') AS r FROM ${t}_cmd" ->
+            "reflect",
+          s"SELECT TRANSFORM(n) USING 'touch $touched' AS (x) FROM ${t}_cmd" -> "TRANSFORM",
+          s"SELECT value FROM text.`$file`" -> "by path",
+          s"SELECT * FROM IDENTIFIER('text.`$file`')" -> "by path",
+          s"SELECT n FROM ${t}_cmd WHERE EXISTS (SELECT value FROM text.`$file`)" -> "by path") ++
+          store.selectAll.inputFiles.take(1).map(f => s"SELECT * FROM parquet.`$f`" -> "by path")
+        reflective.foreach { case (sql, why) =>
           val (code, body) = get(srv.port, s"/c/${enc(sql)}")
-          assert(code === 400 && body.contains("reflect"), s"$sql: $body")
+          assert(code === 400 && body.contains(why) && !body.contains("secret"), s"$sql: $body")
         }
+        assert(kind == "RecentStore" || reflective.size == 8)
+        assert(get(srv.port, s"/a/${enc(s"text`.`$file")}")._1 === 400)
         assert(System.getProperty(prop) === null)
+        assert(!touched.exists)
         assert(spark.conf.getOption(conf) === None)
         assert(spark.catalog.tableExists(s"${t}_cmd"))
         assert(!spark.catalog.isCached(s"${t}_cmd"))
         assert(jobsDuring { assert(get(srv.port, q) === ((200, """[{"n":1}]"""))) } === 0)
-        assert(srv.notKept("error").get === (refused.size + reflective.size).toLong)
+        assert(srv.notKept("error").get === (refused.size + reflective.size + 1).toLong)
         val (code, body) = get(srv.port, s"/c/${enc(s"SELECT nope FROM ${t}_cmd")}")
         assert(code === 400, body)
-        assert(srv.notKept("error").get === (refused.size + reflective.size + 1).toLong)
+        assert(srv.notKept("error").get === (refused.size + reflective.size + 2).toLong)
       } finally { srv.stop(); System.clearProperty(prop) }
     }
 
